@@ -194,7 +194,7 @@ def ngram_jaccard_pairs(
 
 
 def minhash_doc_sets(
-    df: DataFrame,
+    df: DataFrame | None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
@@ -219,6 +219,10 @@ def minhash_doc_sets(
     # ``posts=`` (r17): reuse a caller-built ngram_posts substrate — the
     # extra ``_sz`` column is projected away, the (doc, shingle-hash)
     # rows are identical to the inline build
+    if df is None and posts is None:
+        raise ValueError(
+            "pass the documents frame (df) or a prebuilt ngram_posts frame (posts=)"
+        )
     if posts is not None:
         posts = posts.select("_id", "_sh")
     else:
@@ -291,7 +295,7 @@ def minhash_band_rows(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
+    df: DataFrame | None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
@@ -306,7 +310,8 @@ def minhash_lsh_pairs(
     exact Jaccard — the scale path for near-dedup. ``posts=`` forwards a
     caller-built :func:`ngram_posts` substrate to
     :func:`minhash_doc_sets` (the recall certificate shares one shingle
-    build between the exact tier and this one).
+    build between the exact tier and this one); ``df`` may then be None,
+    and passing neither raises ``ValueError``.
 
     Signature: each shingle string is hashed ONCE (``h = xxhash64(s)``,
     the expensive part) at explode time; permutation i re-hashes the long

@@ -175,11 +175,13 @@ def fan_out(
                 target = max(1, min(target, -(-est // int(per_task_bytes))))
         except Exception:
             pass  # stats unavailable -> keep full width
-    # df.rdd converts the analyzed plan to an RDD on the driver to read its
-    # partition count — pure planning (no job), milliseconds per call, and
-    # the only public API that answers "how many partitions would this scan
-    # get". Acceptable because fan_out wraps per-QUERY inputs, not per-row
-    # paths; don't call it inside loops.
+    # df.rdd converts the plan to an RDD on the driver to read its partition
+    # count — the only public API that answers "how many partitions would
+    # this scan get". For a plain scan or a cached frame that is planning
+    # only (no job), but with AQE on, an uncached input containing an
+    # exchange runs its shuffle stages first, one job each (1-2 jobs
+    # measured for dedup_exact(filter_corpus(docs)) at local[4]). fan_out
+    # wraps per-QUERY inputs, not per-row paths; don't call it inside loops.
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -239,16 +241,16 @@ def range_prefix_offsets(df, order_cols, total_expr):
     order columns, pin partition ids with an eager localCheckpoint (the
     offsets collect and the downstream projection MUST see the same
     placement), collect per-partition totals (|partitions| rows — bounded
-    driver work), and return ``(binned, off_expr)`` where ``off_expr``
+    driver work), and return ``(binned, off_expr, total)``: ``off_expr``
     maps each row's ``_pid`` to the cumulative total of all earlier
-    partitions. ``total_expr`` is the per-partition aggregate whose
-    running total is being distributed (``F.sum(col)`` for value cumsums,
+    partitions, and ``total`` is the grand total across all partitions.
+    ``total_expr`` is the per-partition aggregate whose running total is
+    being distributed (``F.sum(col)`` for value cumsums,
     ``F.count(lit(1))`` for row numbering).
 
-    Returns ``(binned, off_expr, total)`` — ``total`` is the grand total
-    across all partitions (r17: callers like ``rfm_scores`` need the row
+    ``total`` exists because callers like ``rfm_scores`` need the row
     count the collect already computed; returning it saves them a
-    separate count job).
+    separate count job.
 
     Raises if the input already carries a ``_pid`` column — silently
     overwriting it would return partition ids in place of user data.

@@ -21,9 +21,12 @@ instead of a 10k-row driver collect.
 
 from __future__ import annotations
 
+from datetime import date, timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     LongType,
     StringType,
     StructField,
@@ -41,7 +44,11 @@ from bigdata_etl_customer360_spark.operators.relational import (
     top_k_per_group,
     trend_compare,
 )
-from bigdata_etl_customer360_spark.sources.readers import read_json_lines, read_parquet
+from bigdata_etl_customer360_spark.sources.readers import (
+    read_json_lines,
+    read_parquet,
+    read_partition_window,
+)
 
 # --- interaction (log_content) ---------------------------------------------
 
@@ -136,19 +143,28 @@ def interaction_pipeline(spark: SparkSession, paths: list[str]) -> DataFrame:
     return _interaction_profile(_interaction_clean(spark, paths))
 
 
-def _interaction_profile(clean: DataFrame) -> DataFrame:
+def _interaction_profile(clean: DataFrame, span_days: int | None = None) -> DataFrame:
     # ONE grouped aggregation: the 5 pivoted sums AND the distinct-day
     # count ride the same shuffle (the reference pivots per day, unions 30
     # frames, then aggregates again — 31 shuffles where one suffices).
+    # ``span_days`` bounds how many distinct dates ``clean`` can hold.
     sums = [
         F.coalesce(
             F.sum(F.when(F.col("Type") == t, F.col("TotalDuration"))), F.lit(0)
         ).alias(f"Total_{_slug(t)}")
         for t in CONTENT_TYPES
     ]
-    renamed = clean.groupBy("Contract").agg(
-        *sums, F.countDistinct("Date").alias("Active")
-    )
+    if span_days is not None and span_days <= ACTIVE_BITMASK_MAX_DAYS:
+        # Distinct dates less than 64 days apart never share a residue mod
+        # 64, so the popcount of OR-ed day bits is the exact distinct-day
+        # count. bit_or is a fixed-width partial aggregate: one plain
+        # hash-aggregate shuffle, where countDistinct plans two. No
+        # per-window literal, so generated code is the same every day.
+        day_bit = F.expr("shiftleft(1L, pmod(unix_date(Date), 64))")
+        active = F.bit_count(F.bit_or(day_bit)).cast("long")
+    else:
+        active = F.countDistinct("Date")
+    renamed = clean.groupBy("Contract").agg(*sums, active.alias("Active"))
     slug_cols = [f"Total_{_slug(t)}" for t in CONTENT_TYPES]
     prio_cols = [f"Total_{_slug(t)}" for t in MOST_WATCHED_PRIORITY]
 
@@ -167,6 +183,23 @@ def _interaction_profile(clean: DataFrame) -> DataFrame:
 
 
 # --- incremental lake (daily re-run operating model) ------------------------
+
+# What interaction_ingest_daily lands: the cleaned event columns, with Date
+# as the partition column. Pinned so a lake read infers nothing.
+INTERACTION_LAKE_SCHEMA = StructType(
+    [
+        StructField("Contract", StringType()),
+        StructField("Mac", StringType()),
+        StructField("TotalDuration", LongType()),
+        StructField("AppName", StringType()),
+        StructField("Type", StringType()),
+        StructField("Date", DateType()),
+    ]
+)
+
+# Longest window whose distinct-day count the profile takes from a 64-bit
+# day mask (one shuffle) instead of countDistinct (two).
+ACTIVE_BITMASK_MAX_DAYS = 64
 
 
 def interaction_ingest_daily(spark: SparkSession, paths: list[str], lake_path: str) -> None:
@@ -192,16 +225,35 @@ def interaction_profile_from_lake(
     start: str | None = None,
     end: str | None = None,
 ) -> DataFrame:
-    """Stage 2: the same single-shuffle profile aggregate, reading the
-    Date-partitioned lake. ``start``/``end`` (ISO dates, inclusive) become
-    partition-pruning filters — a 30-day profile over a years-deep lake
-    scans 30 directories, not the table."""
-    lake = spark.read.parquet(lake_path)
+    """Stage 2: the same profile aggregate, reading the Date-partitioned
+    lake.
+
+    With both ``start`` and ``end`` (ISO dates, inclusive) the lake is read
+    through :func:`read_partition_window`: only the window's existing
+    ``Date=`` directories are resolved and listed, with the pinned
+    :data:`INTERACTION_LAKE_SCHEMA` — listing cost is O(window), not
+    O(lake depth), and building the frame runs no Spark job for windows
+    up to 32 days. Days missing from the lake are skipped. The bounds stay
+    as filters on top; they touch only the partition column, so they cost
+    nothing at run time. A window of at most ``ACTIVE_BITMASK_MAX_DAYS``
+    (64) days counts active days with a day bitmask in the aggregate's
+    single shuffle (exact only while every date in the frame lies within
+    64 consecutive days, which the window guarantees); longer windows and
+    calls without a window (one or no bound: a full-lake read) use
+    countDistinct."""
+    span_days = None
+    if start is not None and end is not None:
+        d0, d1 = date.fromisoformat(start), date.fromisoformat(end)
+        span_days = max((d1 - d0).days + 1, 0)
+        days = [(d0 + timedelta(days=k)).isoformat() for k in range(span_days)]
+        lake = read_partition_window(spark, lake_path, "Date", days, INTERACTION_LAKE_SCHEMA)
+    else:
+        lake = spark.read.parquet(lake_path)
     if start is not None:
         lake = lake.filter(F.col("Date") >= F.lit(start).cast("date"))
     if end is not None:
         lake = lake.filter(F.col("Date") <= F.lit(end).cast("date"))
-    return _interaction_profile(lake)
+    return _interaction_profile(lake, span_days)
 
 
 # --- behavior (log_search) --------------------------------------------------
@@ -306,6 +358,17 @@ def _month_trend(t6: DataFrame, t7: DataFrame) -> DataFrame:
     )
 
 
+# What behavior_ingest_month lands, with month as the partition column.
+BEHAVIOR_LAKE_SCHEMA = StructType(
+    [
+        StructField("user_id", StringType()),
+        StructField("most_search", StringType()),
+        StructField("category", StringType()),
+        StructField("month", StringType()),
+    ]
+)
+
+
 def behavior_ingest_month(
     spark: SparkSession,
     paths: list[str],
@@ -334,9 +397,13 @@ def behavior_trend_from_lake(
     spark: SparkSession, lake_path: str, month_a: str, month_b: str
 ) -> DataFrame:
     """Incremental stage 2: month-over-month trend between any two landed
-    months — two partition-pruned reads of the profile lake, then the same
-    join/trend plan as the one-shot pipeline."""
-    lake = spark.read.parquet(lake_path)
+    months — the two ``month=`` partitions read through
+    :func:`read_partition_window` with the pinned
+    :data:`BEHAVIOR_LAKE_SCHEMA` (no listing of other months, no footer
+    job), then the same join/trend plan as the one-shot pipeline."""
+    lake = read_partition_window(
+        spark, lake_path, "month", [month_a, month_b], BEHAVIOR_LAKE_SCHEMA
+    )
 
     def tagged(month: str, tag: str) -> DataFrame:
         return lake.filter(F.col("month") == month).select(

@@ -73,6 +73,43 @@ def read_parquet(
     return df
 
 
+def read_partition_window(
+    spark: SparkSession,
+    base_path: str,
+    column: str,
+    values: list[str],
+    schema: StructType,
+) -> DataFrame:
+    """Parquet scan of just the ``<column>=<value>`` partitions of a
+    hive-layout table, with a pinned ``schema`` (data columns plus
+    ``column``).
+
+    ``spark.read.parquet(base_path)`` lists every partition directory
+    (past ``spark.sql.sources.parallelPartitionDiscovery.threshold`` — 32 —
+    directories, as a Spark job) and then runs a footer job to infer a
+    schema, before any filter can prune. Here the driver asks the Hadoop
+    filesystem whether each window directory exists and hands only those
+    to the reader, with ``basePath`` so ``column`` stays a partition
+    column and the schema pinned so no footer is read: listing cost is
+    O(window), not O(table depth), and building the frame runs no Spark
+    job while the window stays within that threshold.
+
+    Values missing from the table are skipped and repeated ones read once;
+    if none exists the result is an empty frame with ``schema``. Values
+    are used as directory names unescaped: dates and month tags need no
+    escaping.
+    """
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(base_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    root = base_path.rstrip("/")
+    dirs = [f"{root}/{column}={v}" for v in dict.fromkeys(values)]
+    present = [d for d in dirs if fs.exists(hpath(d))]
+    if not present:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", base_path).parquet(*present)
+
+
 def read_csv(
     spark: SparkSession,
     paths: list[str] | str,

@@ -20,6 +20,7 @@ from bigdata_etl_customer360_spark.functions.expressions import (
 )
 from bigdata_etl_customer360_spark.operators.dedup import (
     dedup_exact,
+    minhash_doc_sets,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -234,6 +235,12 @@ def test_minhash_max_df_keeps_near_dups(spark):
     uncapped = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(
         df, num_hashes=64, bands=32, threshold=0.3).collect()}
     assert (1, 2) in uncapped
+
+
+def test_minhash_without_docs_or_posts_raises_value_error():
+    for fn in (minhash_doc_sets, minhash_lsh_pairs):
+        with pytest.raises(ValueError, match="posts"):
+            fn(None)
 
 
 def test_simhash_identical_text_hamming_zero(spark):

@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import random
 from collections import Counter, defaultdict
+from datetime import date, timedelta
 
 import pytest
 
@@ -31,9 +32,13 @@ from bigdata_etl_customer360_spark.plans.reference_replay import (
 APPS = list(APP_TYPE_MAP) + ["APP_X", "ERR"]  # two unmapped → dropped
 
 
-def _gen_log_content(tmp_path):
+APRIL = [f"202204{d:02d}" for d in range(1, 31)]
+
+
+def _gen_log_content(tmp_path, days=APRIL, extra=()):
+    """Write one ``yyyyMMdd.json`` file per day; ``extra`` adds
+    ``(day, contract, app, duration)`` rows on top of the random ones."""
     rng = random.Random(7)
-    days = [f"202204{d:02d}" for d in range(1, 31)]
     contracts = [f"CT{i:04d}" for i in range(40)]
     rows_by_day = defaultdict(list)
     for ci, c in enumerate(contracts):
@@ -65,6 +70,11 @@ def _gen_log_content(tmp_path):
         rows_by_day[days[1]].append(
             {"_index": "history", "_type": "kplus", "_id": f"tie-{app}", "_score": 0,
              "_source": {"Contract": "CT_TIE", "Mac": "x", "TotalDuration": 777, "AppName": app}}
+        )
+    for day, c, app, dur in extra:
+        rows_by_day[day].append(
+            {"_index": "history", "_type": "kplus", "_id": f"{c}-{day}", "_score": 0,
+             "_source": {"Contract": c, "Mac": "x", "TotalDuration": dur, "AppName": app}}
         )
     paths = []
     for day in days:
@@ -287,3 +297,154 @@ def test_behavior_incremental_month_rerun(spark, tmp_path):
     got = behavior_trend_from_lake(spark, lake, "2022-06", "2022-07")
     want = behavior_pipeline(spark, [paths[6]], [paths[7]], CLASSIFIER)
     assert _profile_rows(got) == _profile_rows(want)
+
+
+# --- partition-window lake reads ---------------------------------------------
+
+# 70 consecutive days from 2022-03-01; day 40 is never landed. CT_E64 is
+# active on the first and last day of a 64-day window, CT_E65 on the first
+# and last day of a 65-day window (same residue mod 64).
+LAKE_DAYS = [
+    (date(2022, 3, 1) + timedelta(days=k)).strftime("%Y%m%d") for k in range(70)
+]
+MISSING_DAY = 40
+WIN64 = (2, 65)
+WIN65 = (3, 67)
+
+
+def _iso(day: str) -> str:
+    return f"{day[:4]}-{day[4:6]}-{day[6:]}"
+
+
+@pytest.fixture(scope="module")
+def window_lake(spark, tmp_path_factory):
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        interaction_ingest_daily,
+    )
+
+    root = tmp_path_factory.mktemp("window_lake")
+    logs = root / "logs"
+    logs.mkdir()
+    extra = [
+        (LAKE_DAYS[WIN64[0]], "CT_E64", "SPORT", 5),
+        (LAKE_DAYS[WIN64[1]], "CT_E64", "VOD", 7),
+        (LAKE_DAYS[WIN65[0]], "CT_E65", "SPORT", 11),
+        (LAKE_DAYS[WIN65[1]], "CT_E65", "VOD", 13),
+    ]
+    paths, _ = _gen_log_content(logs, days=LAKE_DAYS, extra=extra)
+    lake = str(root / "lake")
+    interaction_ingest_daily(
+        spark, [p for k, p in enumerate(paths) if k != MISSING_DAY], lake
+    )
+    return paths, lake
+
+
+def _windowed(spark, window_lake, first, last):
+    """(profile read from the lake, interaction_pipeline over the same
+    landed files) for the inclusive day-index window [first, last]."""
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        interaction_profile_from_lake,
+    )
+
+    paths, lake = window_lake
+    got = interaction_profile_from_lake(
+        spark, lake, _iso(LAKE_DAYS[first]), _iso(LAKE_DAYS[last])
+    )
+    files = [paths[k] for k in range(first, last + 1) if k != MISSING_DAY]
+    return got, interaction_pipeline(spark, files)
+
+
+def _build_with_jobs(spark, group, build):
+    """(frame returned by ``build()``, ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "frame build only")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lake_reader_builds_run_no_spark_job(spark, window_lake, tmp_path):
+    """A 30-day window over a 69-day lake, and a two-month behavior trend,
+    resolve their partitions on the driver: building the frames runs no
+    listing or footer job."""
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        behavior_ingest_month,
+        behavior_trend_from_lake,
+        interaction_profile_from_lake,
+    )
+
+    paths, lake = window_lake
+    profile, jobs = _build_with_jobs(spark, "build-profile", lambda: (
+        interaction_profile_from_lake(spark, lake, _iso(LAKE_DAYS[0]), _iso(LAKE_DAYS[29]))
+    ))
+    assert jobs == []
+    assert _profile_rows(profile) == _profile_rows(interaction_pipeline(spark, paths[:30]))
+
+    log_paths, _, _, _ = _gen_log_search(tmp_path, spark)
+    blake = str(tmp_path / "behavior_lake")
+    behavior_ingest_month(spark, [log_paths[6]], CLASSIFIER, blake, "2022-06")
+    behavior_ingest_month(spark, [log_paths[7]], CLASSIFIER, blake, "2022-07")
+    trend, jobs = _build_with_jobs(spark, "build-trend", lambda: (
+        behavior_trend_from_lake(spark, blake, "2022-06", "2022-07")
+    ))
+    assert jobs == []
+    want = behavior_pipeline(spark, [log_paths[6]], [log_paths[7]], CLASSIFIER)
+    assert _profile_rows(trend) == _profile_rows(want)
+
+
+def test_lake_schemas_match_what_ingest_writes(spark, window_lake, tmp_path):
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        BEHAVIOR_LAKE_SCHEMA,
+        INTERACTION_LAKE_SCHEMA,
+        behavior_ingest_month,
+    )
+
+    _, lake = window_lake
+    assert spark.read.parquet(lake).schema == INTERACTION_LAKE_SCHEMA
+
+    log_paths, _, _, _ = _gen_log_search(tmp_path, spark)
+    blake = str(tmp_path / "behavior_lake")
+    behavior_ingest_month(spark, [log_paths[6]], CLASSIFIER, blake, "2022-06")
+    assert spark.read.parquet(blake).schema == BEHAVIOR_LAKE_SCHEMA
+
+
+def test_lake_window_skips_missing_day(spark, window_lake):
+    got, want = _windowed(spark, window_lake, MISSING_DAY - 15, MISSING_DAY + 14)
+    assert _profile_rows(got) == _profile_rows(want)
+
+
+def test_lake_window_with_no_landed_day_is_empty(spark, window_lake):
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        interaction_profile_from_lake,
+    )
+
+    paths, lake = window_lake
+    got = interaction_profile_from_lake(spark, lake, "2021-01-01", "2021-01-30")
+    assert got.collect() == []
+    shape = interaction_pipeline(spark, paths[:1]).schema
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in shape
+    ]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lake_window_64_days_counts_active_days_by_bitmask(spark, window_lake):
+    got, want = _windowed(spark, window_lake, *WIN64)
+    assert "bit_or" in _plan(got)
+    rows = _profile_rows(got)
+    assert rows == _profile_rows(want)
+    active = {r["Contract"]: r["Active"] for r in got.collect()}
+    assert active["CT_E64"] == 2 and active["CT_E65"] == 1
+
+
+def test_lake_window_65_days_counts_distinct(spark, window_lake):
+    got, want = _windowed(spark, window_lake, *WIN65)
+    assert "bit_or" not in _plan(got)
+    assert _profile_rows(got) == _profile_rows(want)
+    active = {r["Contract"]: r["Active"] for r in got.collect()}
+    assert active["CT_E65"] == 2
