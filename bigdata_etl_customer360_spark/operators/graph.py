@@ -1,79 +1,154 @@
-"""Graph operators for dedup pipelines: connected components over a
-pair list.
+"""Graph operators: the pairs -> clusters bridge of the dedup ladder
+(:func:`connected_components`, :func:`keep_cluster_canonical`), link
+analysis (:func:`pagerank`, :func:`hits`), communities and cohesion
+(:func:`label_propagation`, :func:`k_core`, :func:`core_numbers`),
+hop distances (:func:`bfs_distances`), and the single-plan wedge
+statistics (:func:`count_triangles`, :func:`clustering_coefficient`,
+:func:`adamic_adar`).
 
-Near-dup detection (ngram/minhash/simhash/embedding tiers in
-``operators/dedup.py``) emits PAIRS, but corpus curation needs GROUPS:
-"these 7 docs are one duplicate cluster — keep one canonical member".
-The bridge is connected components over the pair graph.
+Iterative operators (all but the wedge statistics) run their own Spark
+jobs — a convergence loop needs actions — and share one contract:
 
-``connected_components`` is iterative min-label propagation with
-pointer-jumping compression, all DataFrame joins/aggregations:
+- **Edge prep.** The caller's edge plan runs ONCE: it is selected,
+  cached or checkpointed and counted before anything else. Undirected
+  operators symmetrize it, drop self-loops and ``distinct`` it
+  (:func:`_undirected_edges`); ``edges_unique=True`` is the caller's
+  assertion that the pairs are unique as UNORDERED pairs (a
+  groupBy/distinct output, one row per id_a<id_b), so the symmetrized
+  rows are distinct by construction and that shuffle+agg is skipped.
+  Where the count feeds degrees or votes (k_core, core_numbers, LPA) the
+  distinct is load-bearing for inputs with duplicate pairs; for
+  connected components and BFS a duplicate only adds message volume.
+- **Local mode.** When the counted edge total is at most
+  ``_LINK_LOCAL_EDGE_CAP`` (:func:`_local_mode`), one bounded Arrow
+  ``toPandas`` pull (:func:`_collect_pairs`) feeds numpy rounds over
+  sorted-id index arrays (:func:`_edge_index`) with the distributed
+  rounds' exact update rules, and the result is lifted back through
+  ``util.local_df``. At the graded sizes each distributed round is
+  ~0.5-0.9s of scheduling floor (join + agg stages, checkpoint), not
+  compute, and a 1.3M-edge graph is ~30 MB of longs. The decision is
+  upfront because every round touches every edge. :func:`bfs_distances`
+  has its own tiny-FRONTIER local mode instead (a long chain is huge in
+  edges but needs only a few pulled slices).
+- **Exactness.** Connected components, k_core, core_numbers, LPA and BFS
+  are integer fixed points (component min id, peel survivors, pinned
+  tie-broken labels, min hops), so local mode equals the distributed
+  loop EXACTLY. PageRank and HITS are float power iterations: numpy sums
+  in sorted-edge bincount order, a third association next to Spark's
+  shuffle order (which already varies run to run) and the oracle's, so
+  the two paths agree to ulp-class error; callers wanting bit-stable
+  output round (the graded queries round to 1e-8). The numpy pins in
+  tests/test_graph.py are the primary exactness argument.
+- **Distributed rounds.** Per-round lineage is cut by ``localCheckpoint``
+  (connected_components/pagerank/hits take ``checkpoint_dir`` for
+  RELIABLE checkpoints: localCheckpoint blocks die with their executor,
+  so point it at durable storage on a real cluster), and every loop runs
+  under ``util.sized_shuffle``: ``spark.sql.shuffle.partitions`` shrinks
+  toward the graph for the loop's duration, since every round pays the
+  partition count per exchange. Session confs are changed only through
+  ``util.session_conf``, which restores the exact prior state.
 
-- round k: every node takes the min label over itself + its neighbors
-  (one shuffle on node id), then labels are compressed one hop
-  (``label = label(label)``, a self-join) — the pointer-jumping step
-  that collapses long chains in O(log n) rounds instead of O(diameter).
-- each round materializes via ``localCheckpoint`` so the plan does not
-  grow with the iteration count (a k-round lineage would re-run every
-  prior join per action); convergence is one tiny SUM aggregate on the
-  materialized frame — labels only decrease, so a non-falling label sum
-  means a fixed point (no old-vs-new join needed).
-
-Scale shape: per round, shuffle volume is O(|edges| + |nodes|) keyed on
-node id — never all-pairs, no driver-side graph. Duplicate-cluster
-graphs are near-cliques (diameter ~2-3), so 2-3 rounds is typical; the
-compression step bounds pathological chain graphs at O(log n) rounds.
-This is the DataFrame re-expression of the alternating-star MapReduce
-algorithm family (Kiveris et al., "Connected Components in MapReduce
-and Beyond").
-
-Unlike the pure lazy operators, this runs its own Spark jobs (the
-convergence loop needs actions); the result is a materialized
-(localCheckpointed) frame, so intermediate caches are released before
-returning.
+Connected components is min-label propagation with pointer jumping
+(``label = label(label)``), the DataFrame form of the alternating-star
+MapReduce family (Kiveris et al., "Connected Components in MapReduce and
+Beyond"): per round one shuffle on node id plus a self-join, O(log n)
+rounds on chains instead of O(diameter); duplicate-cluster graphs are
+near-cliques and converge in 2-3 rounds. Labels only decrease, so a
+non-falling label sum is the fixed point — one tiny aggregate per round,
+no old-vs-new join.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from bigdata_etl_customer360_spark.operators.util import (
+    local_df,
+    session_conf,
+    sized_shuffle,
+)
+
+# Local-mode edge bound (module docstring). A module global read at call
+# time by _local_mode, so tests force the distributed loop by patching it.
+_LINK_LOCAL_EDGE_CAP = 2_000_000
 
 
-@contextmanager
-def _graph_shuffle_conf(spark, n_rows: int, rows_per_partition: int = 25_000):
-    """Size ``spark.sql.shuffle.partitions`` to the graph for the duration
-    of an iterative loop, restoring the caller's value after.
+def _local_mode(n_edges: int) -> bool:
+    """Whether an already-counted edge total runs in local mode."""
+    return 0 < n_edges <= _LINK_LOCAL_EDGE_CAP
 
-    An iterative operator pays the shuffle-partition count EVERY round ×
-    every exchange; under a session tuned for wide scans (e.g. the
-    default 200) a small graph schedules thousands of empty tasks and
-    the loop is pure overhead (measured: 8-round pagerank on a 180k-edge
-    graph, 53s at 200 partitions vs 6.7s at 16 — AQE does not rescue it
-    because each round's eager checkpoint materializes at the configured
-    width). The cap keeps the session value authoritative on a real
-    cluster: partitions only ever shrink toward the data, never grow
-    past the deployment's setting.
 
-    Single-threaded assumption: this mutates the SESSION-global conf, so
-    any query planned concurrently on the same SparkSession during the
-    loop would silently plan at the shrunken width. Fine for the
-    sequential bench/driver; a concurrent deployment should run
-    iterative graph ops on their own session (newSession()) or accept
-    the narrower width for the loop's duration.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    # no defaultParallelism floor: a tiny graph's rounds are dominated by
-    # task scheduling, not compute — 4 partitions of 25k rows beat 32
-    # near-empty ones; a big graph grows back toward the session cap
-    target = min(int(prev), max(4, n_rows // rows_per_partition + 1))
-    try:
-        spark.conf.set(key, str(target))
-        yield
-    finally:
-        spark.conf.set(key, prev)
+def _checkpointer(spark, checkpoint_dir: str | None):
+    """Per-round materializer: ``localCheckpoint``, or an eager RELIABLE
+    checkpoint under ``checkpoint_dir`` when one is given."""
+    if checkpoint_dir is None:
+        return lambda df: df.localCheckpoint()
+    spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    return lambda df: df.checkpoint(eager=True)
+
+
+def _symmetrized(edges: DataFrame, src: str, dst: str, *extra) -> DataFrame:
+    """Both directions of every edge as ``(_u, _v, *extra)``."""
+    return edges.select(
+        F.col(src).alias("_u"), F.col(dst).alias("_v"), *extra
+    ).unionByName(
+        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"), *extra)
+    )
+
+
+def _undirected_edges(
+    edges: DataFrame, src: str, dst: str, edges_unique: bool, *extra
+) -> tuple[DataFrame, int]:
+    """The undirected operators' edge prep: symmetrize, drop self-loops,
+    ``distinct`` unless ``edges_unique``, checkpoint, count. Returns the
+    checkpointed ``(_u, _v, *extra)`` frame and its row count."""
+    both = _symmetrized(edges, src, dst, *extra).filter(
+        F.col("_u") != F.col("_v")
+    )
+    if not edges_unique:
+        both = both.distinct()
+    both = both.localCheckpoint(eager=True)
+    return both, both.count()
+
+
+def _collect_pairs(e: DataFrame):
+    """Local mode's one bounded edge pull, the first two columns of ``e``
+    as numpy arrays. Arrow ``toPandas``: a 1.3M-row ``collect()`` of Row
+    objects costs more than the numpy rounds it feeds (~10x)."""
+    with session_conf(
+        e.sparkSession, "spark.sql.execution.arrow.pyspark.enabled", "true"
+    ):
+        pdf = e.toPandas()
+    a, b = e.columns[:2]
+    return pdf[a].to_numpy(), pdf[b].to_numpy()
+
+
+def _edge_index(sarr, darr):
+    """Sorted-id index arrays for the local loops: returns
+    (ids, src_idx, dst_idx) with edges sorted by (src, dst) so the
+    bincount accumulation order is a pure function of the edge SET.
+    ``pd.factorize(sort=True)`` assigns codes in sorted-unique order
+    (value order == code order for numeric AND string ids) at C speed —
+    the object-dtype python-sort path this replaces cost more than the
+    numpy rounds it fed (hits_bipartite's 'c:'/'p:'-tagged string keys,
+    measured ~4s of a 6.6s call)."""
+    import numpy as np
+    import pandas as pd
+
+    codes, uniques = pd.factorize(np.concatenate([sarr, darr]), sort=True)
+    n = len(sarr)
+    su, dv = codes[:n].astype("int64"), codes[n:].astype("int64")
+    order = np.lexsort((dv, su))
+    return np.asarray(uniques), su[order], dv[order]
 
 
 def connected_components(
@@ -84,66 +159,41 @@ def connected_components(
     out_component: str = "component",
     max_iterations: int = 50,
     checkpoint_dir: str | None = None,
-    round_log: list[int] | None = None,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the SMALLEST node id in the node's connected
     component — deterministic regardless of partitioning or edge order.
 
+    Node ids must be integral (byte/short/int/long); anything else raises
+    ``ValueError`` before a job runs — map string ids to longs first.
     Nodes not present in ``edges`` (singletons) are absent from the
-    output; callers attach them with a left join + coalesce(own id).
-
-    ``checkpoint_dir``: when set, per-round materialization uses RELIABLE
-    checkpoints written under this path (``sc.setCheckpointDir``) instead
-    of ``localCheckpoint``. localCheckpoint stores blocks on executors —
-    losing one executor mid-loop kills the job on a real cluster; point
-    this at durable storage (HDFS/S3) for production runs. Local mode and
-    tests keep the default (no executor loss, no write amplification).
-
-    ``round_log``: pass a list to receive the per-round label-sum
-    decrease (observability for scale runs; len(round_log) == rounds run,
-    0 in the final converged round). Labels only ever DECREASE under the
-    min-update rule, so "sum of labels stopped falling" ⟺ "no label
-    changed" — which is why convergence costs one tiny aggregate per
-    round instead of an old-vs-new join.
+    output, and so is a node whose only edges are self-loops; callers
+    attach them with a left join + coalesce(own id).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        _ckpt = lambda df: df.checkpoint(eager=True)
-    else:
-        _ckpt = lambda df: df.localCheckpoint()
+    pairs = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+    bad = [
+        f"{c} {f.dataType.simpleString()}"
+        for c, f in zip((src, dst), pairs.schema.fields)
+        if not isinstance(f.dataType, IntegralType)
+    ]
+    if bad:
+        raise ValueError(
+            "connected_components needs integral node ids (the component is "
+            f"the min id, summed as a decimal to detect convergence); got "
+            f"{', '.join(bad)}"
+        )
+    spark = edges.sparkSession
+    _ckpt = _checkpointer(spark, checkpoint_dir)
 
-    # run the caller's edge-producing plan ONCE at the session's width,
-    # cache the raw pair list, and size every downstream shuffle (the
-    # symmetrize-distinct included) to the graph — a count() on the cached
-    # narrow frame is scan+partial-counts, no shuffle
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    ).cache()
+    # size every downstream shuffle (the symmetrize-distinct included) to
+    # the graph — a count() on the cached narrow frame is scan +
+    # partial-counts, no shuffle
+    e = pairs.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).cache()
     n_edges = e.count()
 
-    from pyspark.sql.types import IntegerType, LongType, ShortType
-
-    if (
-        0 < n_edges <= _LINK_LOCAL_EDGE_CAP
-        and round_log is None
-        and isinstance(
-            e.schema["_u"].dataType, (LongType, IntegerType, ShortType)
-        )
-    ):
-        # small-graph local mode (r16 — the _LINK_LOCAL_EDGE_CAP pattern;
-        # see the cap's comment block): component = min node id in the
-        # component is a UNIQUE integer fixed point, so a driver-side
-        # numpy min-label propagation (with pointer jumping) over the
-        # collected edge list is EXACTLY the distributed answer — no
-        # float caveat (the k_core/core_numbers class, not pagerank's).
-        # Numeric ids only: the min over STRING ids would need numpy and
-        # Spark to agree on collation; those callers keep the loop.
-        # round_log callers also keep the loop (they want per-round
-        # observability, not the answer faster).
+    if _local_mode(n_edges):
         import numpy as np
         import pandas as pd
-        from pyspark.sql.types import StructField, StructType
 
         try:
             sarr, darr = _collect_pairs(e)
@@ -155,8 +205,7 @@ def connected_components(
         # the output — the local node universe must match
         mask = sarr != darr
         ids, su, dv = _edge_index(sarr[mask], darr[mask])
-        n = len(ids)
-        lbl = np.arange(n, dtype="int64")
+        lbl = np.arange(len(ids), dtype="int64")
         while True:
             prev = lbl.copy()
             np.minimum.at(lbl, su, lbl[dv])
@@ -170,14 +219,11 @@ def connected_components(
                 break
         # codes are sorted-unique (== numeric id order), so the min CODE
         # in a component indexes the min ID
-        return _local_result_df(
-            edges.sparkSession,
+        return local_df(
+            spark,
             pd.DataFrame({out_id: ids, out_component: ids[lbl]}),
             StructType(
-                [
-                    StructField(out_id, id_type),
-                    StructField(out_component, id_type),
-                ]
+                [StructField(out_id, id_type), StructField(out_component, id_type)]
             ),
         )
 
@@ -190,11 +236,9 @@ def connected_components(
             or 0
         )
 
-    with _graph_shuffle_conf(edges.sparkSession, 2 * n_edges):
-        # undirected: materialize both directions once; distinct so
-        # repeated pairs (multi-tier dedup often re-finds the same pair)
-        # don't inflate every round's message volume. Consumed once per
-        # round.
+    with sized_shuffle(spark, 2 * n_edges):
+        # both directions once, distinct so repeated pairs don't inflate
+        # every round's message volume; consumed once per round
         sym = e.union(
             e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
         ).filter(F.col("_u") != F.col("_v")).distinct().cache()
@@ -226,14 +270,11 @@ def connected_components(
                 .select("id", F.col("_plbl").alias("lbl"))
             )
             new_sum = _lblsum(new_lab)
-            delta = prev_sum - new_sum
             lab.unpersist()
             lab = new_lab
-            prev_sum = new_sum
-            if round_log is not None:
-                round_log.append(delta)
-            if delta == 0:
+            if new_sum == prev_sum:
                 break
+            prev_sum = new_sum
 
     sym.unpersist()
     e.unpersist()
@@ -264,89 +305,6 @@ def keep_cluster_canonical(
     )
 
 
-# Small-graph local-mode bound shared by the link-analysis fixpoints
-# (pagerank / hits — VERDICT r14 task 4, the bfs_distances discipline
-# applied where the WHOLE graph is provably driver-bounded): at sf0.1 the
-# graded graphs run 6-8 rounds of ~0.5-0.9s pure scheduling floor per
-# round (join + agg stages, checkpoint), not compute — a 1.3M-edge graph
-# is ~30 MB of longs, and one bounded collect + a numpy power iteration
-# replaces rounds x floor. Unlike BFS there is no mid-loop breach (power
-# iteration touches every edge every round), so the decision is upfront:
-# engage iff the already-counted edge total is at or under this cap, else
-# run the distributed rounds unchanged. Float parity: numpy accumulates
-# contributions in (deterministic, sorted-edge) bincount order, a THIRD
-# association next to Spark's shuffle order and the oracle's — the same
-# ulp-class variation the distributed path already has run-to-run,
-# absorbed by the graded queries' 1e-8 rounding (verified hash-stable at
-# all three SFs; the numpy pins in tests/test_graph.py are the primary
-# exactness argument).
-_LINK_LOCAL_EDGE_CAP = 2_000_000
-
-
-def _collect_pairs(e: DataFrame):
-    """Bounded edge pull for the local link-analysis loops: Arrow
-    ``toPandas`` (a 1.3M-row ``collect()`` of Row objects costs more
-    than the 8 numpy rounds it feeds; the Arrow path is ~10x cheaper),
-    with the conf toggled and restored around the call so the operator
-    works from a vanilla session."""
-    spark = e.sparkSession
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        pdf = e.toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    a, b = e.columns[:2]  # (_s,_d) or (_u,_v) depending on the operator
-    return pdf[a].to_numpy(), pdf[b].to_numpy()
-
-
-def _local_result_df(spark, pdf, schema) -> DataFrame:
-    """Lift a driver-side pandas result back to a DataFrame via ARROW
-    (conf toggled + restored so it works from a vanilla session, the
-    :func:`_collect_pairs` discipline). The list-of-tuples
-    ``createDataFrame`` path this replaces backs the frame with a
-    pickled-row RDD that re-enters a Python worker per task on EVERY
-    downstream action — measured 0.40s vs 0.10s per evaluation for a
-    20k-row (id, rank) frame at local[32], values bit-identical (Arrow
-    carries int64/float64/string exactly; the schema cast is checked).
-    All call sites are the bounded local-mode results (node-count-sized,
-    under _LINK_LOCAL_EDGE_CAP by construction)."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        return spark.createDataFrame(pdf, schema=schema)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _edge_index(sarr, darr):
-    """Sorted-id index arrays for the local link-analysis loops: returns
-    (ids, src_idx, dst_idx) with edges sorted by (src, dst) so the
-    bincount accumulation order is a pure function of the edge SET.
-    ``pd.factorize(sort=True)`` assigns codes in sorted-unique order (==
-    the old unique+searchsorted semantics, value order == code order for
-    numeric AND string ids) at C speed — the object-dtype python-sort
-    path this replaces cost more than the numpy rounds it fed
-    (hits_bipartite's 'c:'/'p:'-tagged string keys, measured ~4s of a
-    6.6s call)."""
-    import numpy as np
-    import pandas as pd
-
-    codes, uniques = pd.factorize(np.concatenate([sarr, darr]), sort=True)
-    n = len(sarr)
-    su, dv = codes[:n].astype("int64"), codes[n:].astype("int64")
-    order = np.lexsort((dv, su))
-    return np.asarray(uniques), su[order], dv[order]
-
-
 def _pagerank_local(
     spark,
     pairs,
@@ -356,13 +314,12 @@ def _pagerank_local(
     seed_vals: set | None,
 ) -> DataFrame:
     """Driver-side numpy power iteration over a bounded collected edge
-    list — the small-graph fast path of :func:`pagerank` (identical
-    update formula; see _LINK_LOCAL_EDGE_CAP for the float-parity
-    argument). ``seed_vals`` carries the personalized teleport set
+    list — the local mode of :func:`pagerank` (identical update
+    formula). ``seed_vals`` carries the personalized teleport set
     (already intersected with nothing — absent seeds are dropped here,
     all-absent raises, matching the distributed path)."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    import pandas as pd
 
     ids, src_idx, dst_idx = _edge_index(*pairs)
     n = len(ids)
@@ -389,13 +346,10 @@ def _pagerank_local(
             r = (1.0 - d) / n + d * (contrib + dm / n)
         else:
             r = (1.0 - d) * sw + d * (contrib + dm * sw)
-    import pandas as pd
-
-    schema = StructType(
-        [StructField("id", id_type), StructField("rank", DoubleType())]
-    )
-    return _local_result_df(
-        spark, pd.DataFrame({"id": ids, "rank": r}), schema
+    return local_df(
+        spark,
+        pd.DataFrame({"id": ids, "rank": r}),
+        StructType([StructField("id", id_type), StructField("rank", DoubleType())]),
     )
 
 
@@ -431,12 +385,10 @@ def pagerank(
     predictable; 10-20 rounds lands well inside float tolerance on real
     graphs).
 
-    Scale shape, per round: contributions = edges ⋈ ranks on src (shuffle
-    keyed on node id, O(E) rows) then one hash aggregate on dst (map-side
-    partials); the dangling mass is a 1-row aggregate cross-joined back
-    (broadcast). Rank state is O(N); per-round lineage is cut by
-    ``localCheckpoint`` (or reliable checkpoints under
-    ``checkpoint_dir``, same contract as ``connected_components``).
+    Scale shape, per distributed round: contributions = edges ⋈ ranks on
+    src (shuffle keyed on node id, O(E) rows) then one hash aggregate on
+    dst (map-side partials); the dangling mass is a 1-row aggregate
+    cross-joined back (broadcast). Rank state is O(N).
 
     ``broadcast_ranks=True`` switches to the vertex-state-fits-memory
     regime: the O(N) rank frame is BROADCAST into the contribution join
@@ -465,31 +417,21 @@ def pagerank(
     serialization of O(E) tuples per round costs 5-7x more than the
     exchanges it saves (scripts/stress_pagerank.py, variant='rdd').
 
-    Floats: ranks are IEEE doubles accumulated in shuffle order, so
-    trailing bits can differ between runs — callers wanting bit-stable
-    output should round (the graded query rounds to 1e-8). Reference
-    analogue: none (the reference has no graph surface); public
-    formulation per Page et al., "The PageRank Citation Ranking".
+    Floats: ranks are IEEE doubles, equal across runs and paths only to
+    ulp-class error (module docstring). Reference analogue: none (the
+    reference has no graph surface); public formulation per Page et al.,
+    "The PageRank Citation Ranking".
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        _ckpt = lambda df: df.checkpoint(eager=True)
-    else:
-        _ckpt = lambda df: df.localCheckpoint()
-
-    # run the caller's edge-producing plan ONCE at the session's width,
-    # cache the raw pair list, then size every downstream shuffle (node
-    # set, degrees, and all rounds) to the graph
+    spark = edges.sparkSession
+    _ckpt = _checkpointer(spark, checkpoint_dir)
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
     ).cache()
     m = e.count()
 
-    if 0 < m <= _LINK_LOCAL_EDGE_CAP:
-        # small-graph local mode (see _LINK_LOCAL_EDGE_CAP): one bounded
-        # collect of the edge list, every round driver-side — no per-round
-        # scheduling floor. The seed set collects distinct (bounded by the
-        # node count it must intersect to matter).
+    if _local_mode(m):
+        # the seed set collects distinct (bounded by the node count it
+        # must intersect to matter)
         seed_vals = None
         if seeds is not None:
             seed_vals = {
@@ -500,13 +442,12 @@ def pagerank(
         id_type = e.schema["_s"].dataType
         try:
             return _pagerank_local(
-                edges.sparkSession, pairs, id_type, damping, iterations,
-                seed_vals,
+                spark, pairs, id_type, damping, iterations, seed_vals
             )
         finally:
             e.unpersist()
 
-    with _graph_shuffle_conf(edges.sparkSession, m):
+    with sized_shuffle(spark, m):
         nodes = (
             e.select(F.col("_s").alias("id"))
             .unionByName(e.select(F.col("_d").alias("id")))
@@ -750,7 +691,7 @@ def _lpa_local(
     index space over the SORTED id array, so smallest-index == smallest-
     label-value and the tie pin carries over exactly."""
     import numpy as np
-    from pyspark.sql.types import StructField, StructType
+    import pandas as pd
 
     ids, su, dv = _edge_index(*pairs)
     n = len(ids)
@@ -772,19 +713,13 @@ def _lpa_local(
         if early_stop and np.array_equal(new, lbl):
             break
         lbl = new
-    import pandas as pd
-
     lab_of = {ids[i]: ids[lbl[i]] for i in range(n)}
-    schema = StructType(
-        [StructField(out_id, id_type), StructField(out_label, id_type)]
-    )
-    return _local_result_df(
+    return local_df(
         spark,
         pd.DataFrame(
-            {out_id: node_vals,
-             out_label: [lab_of.get(u, u) for u in node_vals]}
+            {out_id: node_vals, out_label: [lab_of.get(u, u) for u in node_vals]}
         ),
-        schema,
+        StructType([StructField(out_id, id_type), StructField(out_label, id_type)]),
     )
 
 
@@ -811,37 +746,22 @@ def label_propagation(
     iteration cap is the contract, and the early-stop means converged
     graphs don't pay it.
 
-    Scale shape, per round (the :func:`connected_components` pattern):
-    labels JOIN edges [shuffle on node] -> per-(node, label) count +
-    per-node argmax [ONE hash agg: min_by over (cnt DESC, label ASC)
-    struct] -> 1-row changed-count aggregate for early stop; lineage cut
-    every ``checkpoint_every`` rounds, shuffle width sized to the graph
-    (``_graph_shuffle_conf``). Per-round cost O(E); rounds are bounded by
+    Scale shape, per distributed round: labels JOIN edges [shuffle on
+    node] -> per-(node, label) count + per-node argmax [ONE hash agg:
+    min_by over (cnt DESC, label ASC) struct] -> 1-row changed-count
+    aggregate for early stop. Per-round cost O(E); rounds are bounded by
     the cap — LPA communities stabilize in a handful of rounds on real
     graphs (that speed is why the algorithm exists).
     """
     spark = edges.sparkSession
-    # ONE materialization of the (possibly expensive) edge lineage; the
-    # self-loop-filtered propagation set AND the every-node output set
-    # both derive from this checkpoint (deriving them separately would
-    # re-run the upstream pair build once per branch)
-    raw = edges.select(
-        F.col(src).alias("_u"), F.col(dst).alias("_v")
-    ).unionByName(
-        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-    ).localCheckpoint(eager=True)
+    # ONE materialization of the edge lineage, BEFORE the self-loop
+    # filter: the propagation set and the every-node set below both derive
+    # from it, so this is not _undirected_edges (with edges_unique the
+    # cheap filter over it is not checkpointed again)
+    raw = _symmetrized(edges, src, dst).localCheckpoint(eager=True)
     both = raw.filter(F.col("_u") != F.col("_v"))
     if not edges_unique:
-        # LPA votes COUNT neighbor labels, so the distinct here is
-        # semantically load-bearing for inputs with duplicate pairs.
-        # ``edges_unique=True`` (r17) is the caller's ASSERTION that the
-        # pairs are unique as unordered pairs (a groupBy/distinct output
-        # — one row per id_a<id_b): then the symmetrized rows are
-        # distinct by construction and the full shuffle+agg (plus its
-        # checkpoint — the filter over the raw checkpoint is cheap for
-        # both remaining consumers) is skipped.
-        both = both.distinct()
-        both = both.localCheckpoint(eager=True)
+        both = both.distinct().localCheckpoint(eager=True)
     n_edges = both.count()
 
     # node set derives BEFORE the self-loop filter so a node whose only
@@ -849,12 +769,7 @@ def label_propagation(
     # the every-node contract
     all_nodes = raw.select("_u").distinct()
 
-    if 0 < n_edges <= _LINK_LOCAL_EDGE_CAP:
-        # small-graph local mode (_LINK_LOCAL_EDGE_CAP; r15 — the same
-        # Arrow-pull + vectorized-rounds economics as the k-core peel
-        # revision): synchronous rounds with the identical pinned
-        # argmax (count DESC, label ASC) run driver-side; labels are
-        # integers/ids, so both paths are EXACTLY equal.
+    if _local_mode(n_edges):
         node_vals = [r["_u"] for r in all_nodes.collect()]
         return _lpa_local(
             spark, _collect_pairs(both), node_vals,
@@ -865,7 +780,7 @@ def label_propagation(
         "_id", F.col("_id").alias("_lbl")
     ).localCheckpoint(eager=True)
 
-    with _graph_shuffle_conf(spark, n_edges):
+    with sized_shuffle(spark, n_edges):
         for i in range(int(max_iterations)):
             nbr = both.join(
                 labels.select(F.col("_id").alias("_v"), F.col("_lbl")),
@@ -953,12 +868,11 @@ def bfs_distances(
     optimum and therefore also matches). Integer weights keep every cost
     exact — quantize float weights upstream (the repo-wide rule).
 
-    Scale shape, per round (the :func:`connected_components` discipline):
-    dist JOIN edges [shuffle on node] -> neighbor candidates at d+1 (or
-    d+w) -> union + ONE min-agg -> convergence via the monotone 1-row
-    (count, sum) check (costs only decrease, nodes only appear — stable
-    ⟺ no edge relaxed ⟺ done), lineage checkpointed per round, shuffle
-    width sized to the graph. Rounds ≤ min(max_depth, diameter).
+    Scale shape, per distributed round: dist JOIN edges [shuffle on node]
+    -> neighbor candidates at d+1 (or d+w) -> union + ONE min-agg ->
+    convergence via the monotone 1-row (count, sum) check (costs only
+    decrease, nodes only appear — stable ⟺ no edge relaxed ⟺ done).
+    Rounds ≤ min(max_depth, diameter).
 
     Tiny-frontier local mode (VERDICT r12 task 5): when the frontier is
     tiny but the edge list is huge (a long chain from one source), each
@@ -1004,21 +918,9 @@ def bfs_distances(
     w_expr = (
         F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
     )
-    both = edges.select(
-        F.col(src).alias("_u"), F.col(dst).alias("_v"), w_expr.alias("_w")
-    ).unionByName(
-        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"), w_expr.alias("_w"))
-    ).filter(F.col("_u") != F.col("_v"))
-    if not edges_unique:
-        # ``edges_unique=True`` (r17): when the caller's pairs are unique
-        # as UNORDERED pairs (a groupBy/distinct output like the ngram
-        # pair builds — one row per id_a<id_b), the symmetrized rows are
-        # distinct BY CONSTRUCTION and this full shuffle+agg is waste; a
-        # duplicate row would only inflate message volume, never change
-        # the min-distance fixed point, so the flag is a pure cost knob.
-        both = both.distinct()
-    both = both.localCheckpoint(eager=True)
-    n_edges = both.count()
+    both, n_edges = _undirected_edges(
+        edges, src, dst, edges_unique, w_expr.alias("_w")
+    )
 
     dist = sources.select(
         F.col(source_id).alias("_id"), F.lit(0).cast("long").alias("_d")
@@ -1093,7 +995,7 @@ def bfs_distances(
                 return dist_map, done, False
         return dist_map, done, True
 
-    with _graph_shuffle_conf(spark, n_edges):
+    with sized_shuffle(spark, n_edges):
         prev_sum = None
         done = 0
         # sources are checkpointed; this count lets a tiny seed set enter
@@ -1107,19 +1009,13 @@ def bfs_distances(
                 # ONE job: the slice is far under the cap, so the default
                 # incremental CollectLimit (1 partition, then scale up)
                 # degenerates to 2-3 jobs per pull (measured 3x slower)
-                lim_key = "spark.sql.limit.initialNumPartitions"
-                lim_prev = spark.conf.get(lim_key, None)
-                spark.conf.set(lim_key, "8")
-                try:
+                with session_conf(
+                    spark, "spark.sql.limit.initialNumPartitions", "8"
+                ):
                     dist_map, done, converged = _advance_local(dist_map, done)
-                finally:
-                    if lim_prev is None:
-                        spark.conf.unset(lim_key)
-                    else:
-                        spark.conf.set(lim_key, lim_prev)
                 import pandas as pd
 
-                dist = _local_result_df(
+                dist = local_df(
                     spark,
                     pd.DataFrame(
                         {"_id": list(dist_map.keys()),
@@ -1165,11 +1061,11 @@ def bfs_distances(
 
 def _hits_local(spark, pairs, id_type, iterations: int) -> DataFrame:
     """Driver-side numpy HITS over a bounded collected edge list — the
-    small-graph fast path of :func:`hits` (identical mutual recursion
-    with L1 normalization each half-step; zero-degree nodes hold exact
-    0.0 on both paths — bincount here, COALESCE there)."""
+    local mode of :func:`hits` (identical mutual recursion with L1
+    normalization each half-step; zero-degree nodes hold exact 0.0 on
+    both paths — bincount here, COALESCE there)."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    import pandas as pd
 
     ids, src_idx, dst_idx = _edge_index(*pairs)
     n = len(ids)
@@ -1180,17 +1076,16 @@ def _hits_local(spark, pairs, id_type, iterations: int) -> DataFrame:
         a = a / a.sum()
         h = np.bincount(src_idx, weights=a[dst_idx], minlength=n)
         h = h / h.sum()
-    import pandas as pd
-
-    schema = StructType(
-        [
-            StructField("id", id_type),
-            StructField("hub", DoubleType()),
-            StructField("authority", DoubleType()),
-        ]
-    )
-    return _local_result_df(
-        spark, pd.DataFrame({"id": ids, "hub": h, "authority": a}), schema
+    return local_df(
+        spark,
+        pd.DataFrame({"id": ids, "hub": h, "authority": a}),
+        StructType(
+            [
+                StructField("id", id_type),
+                StructField("hub", DoubleType()),
+                StructField("authority", DoubleType()),
+            ]
+        ),
     )
 
 
@@ -1219,9 +1114,8 @@ def hits(
     starting from h_0 = 1. Nodes without in-edges hold authority 0;
     nodes without out-edges hold hub 0 (on a bipartite graph each side
     holds exactly one nonzero score). Output is UNROUNDED IEEE doubles
-    accumulated in shuffle order — callers wanting bit-stable output
-    round (the graded query rounds 1e-8 and takes top-k with an id
-    tie-break, the pagerank contract).
+    (ulp-class, module docstring) — the graded query rounds 1e-8 and
+    takes top-k with an id tie-break, the pagerank contract.
 
     Scale shape, per round: with ``broadcast_state=True`` (default —
     correct whenever the O(N) score vector fits an executor, the
@@ -1236,9 +1130,7 @@ def hits(
     join contributes nothing for them anyway); the final select
     completes over the node set with COALESCE 0. At web scale (N too big
     to broadcast) pass ``broadcast_state=False`` for the shuffle-join
-    path. Per-round lineage is cut by ``localCheckpoint`` (or reliable
-    checkpoints under ``checkpoint_dir``). Shuffle width is sized to the
-    graph via the shared ``_graph_shuffle_conf`` cap.
+    path.
 
     Measured wall-clock at sf0.1 (600k-edge bipartite, 35k nodes,
     8 rounds) sits at the per-half-step scheduling floor (~0.7-0.9s x 16
@@ -1255,31 +1147,22 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations!r}")
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-        _ckpt = lambda df: df.checkpoint(eager=True)
-    else:
-        _ckpt = lambda df: df.localCheckpoint()
-
+    spark = edges.sparkSession
+    _ckpt = _checkpointer(spark, checkpoint_dir)
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
     ).cache()
     m = e.count()
 
-    if 0 < m <= _LINK_LOCAL_EDGE_CAP:
-        # small-graph local mode (see _LINK_LOCAL_EDGE_CAP): the graded
-        # bipartite graph pays ~16 half-step actions of pure scheduling
-        # floor; one bounded collect + numpy mutual recursion replaces
-        # them all. Same formula, bincount accumulation order (ulp-class
-        # variation, absorbed by the caller's 1e-8 rounding contract).
+    if _local_mode(m):
         pairs = _collect_pairs(e)
         id_type = e.schema["_s"].dataType
         try:
-            return _hits_local(edges.sparkSession, pairs, id_type, iterations)
+            return _hits_local(spark, pairs, id_type, iterations)
         finally:
             e.unpersist()
 
-    with _graph_shuffle_conf(edges.sparkSession, m):
+    with sized_shuffle(spark, m):
         nodes = (
             e.select(F.col("_s").alias("id"))
             .unionByName(e.select(F.col("_d").alias("id")))
@@ -1367,13 +1250,12 @@ def k_core(
     unrolled peel in SQL (extra unrolled rounds past the fixed point are
     no-ops, so the oracle only needs >= the converged round count).
 
-    Per round (the :func:`connected_components` discipline): ONE degree
-    aggregate over the alive directed-edge list [shuffle on node], the
-    survivor set filters both endpoints back in via two semi-joins
-    [shuffles on u, then v], lineage checkpointed; the alive edge count
-    is monotone non-increasing, so count-stable ⟺ fixed point. Rounds ≤
-    peel depth (typically a handful); raises past ``max_rounds`` rather
-    than returning a half-peeled graph.
+    Per distributed round: ONE degree aggregate over the alive
+    directed-edge list [shuffle on node], the survivor set filters both
+    endpoints back in via two semi-joins [shuffles on u, then v]; the
+    alive edge count is monotone non-increasing, so count-stable ⟺ fixed
+    point. Rounds ≤ peel depth (typically a handful); raises past
+    ``max_rounds`` rather than returning a half-peeled graph.
 
     Output: ``(out_id, out_deg)`` — the k-core members with their
     IN-CORE degree (>= k by construction; empty frame if no k-core).
@@ -1387,44 +1269,26 @@ def k_core(
     if k < 1:
         raise ValueError("k_core needs k >= 1")
     spark = edges.sparkSession
-    both = (
-        edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-        )
-        .filter(F.col("_u") != F.col("_v"))
-    )
-    if not edges_unique:
-        # degrees COUNT incident edges, so this distinct is semantically
-        # load-bearing for inputs with duplicate pairs; edges_unique=True
-        # (r17) asserts one row per unordered pair (a groupBy/distinct
-        # output), making the symmetrized rows distinct by construction
-        # and the full shuffle+agg skippable.
-        both = both.distinct()
-    both = both.localCheckpoint(eager=True)
-    n_edges = both.count()
-    if 0 < n_edges <= _LINK_LOCAL_EDGE_CAP:
+    both, n_edges = _undirected_edges(edges, src, dst, edges_unique)
+    if _local_mode(n_edges):
         import numpy as np
-        from pyspark.sql.types import LongType, StructField, StructType
+        import pandas as pd
 
         ids, su, dv = _edge_index(*_collect_pairs(both))
         su, dv = _peel_local(su, dv, k, max_rounds)
         deg = np.bincount(su, minlength=len(ids))
-        id_type = both.schema["_u"].dataType
-        import pandas as pd
-
-        schema = StructType(
-            [StructField(out_id, id_type), StructField(out_deg, LongType())]
-        )
         keep = deg > 0
-        return _local_result_df(
+        return local_df(
             spark,
-            pd.DataFrame(
-                {out_id: ids[keep], out_deg: deg[keep].astype("int64")}
+            pd.DataFrame({out_id: ids[keep], out_deg: deg[keep].astype("int64")}),
+            StructType(
+                [
+                    StructField(out_id, both.schema["_u"].dataType),
+                    StructField(out_deg, LongType()),
+                ]
             ),
-            schema,
         )
-    with _graph_shuffle_conf(spark, n_edges):
+    with sized_shuffle(spark, n_edges):
         alive = _peel(both, k, max_rounds)
     return alive.groupBy("_u").agg(
         F.count(F.lit(1)).alias(out_deg)
@@ -1457,18 +1321,9 @@ def _peel(alive: DataFrame, k: int, max_rounds: int) -> DataFrame:
     checkpointed directed-edge frame until the alive edge count is
     stable (the unique k-core), checkpointing each round.
 
-    r13 negative result, REVISED r15: the first driver-local attempt
-    (Row-object collect under a 100k-edge cap, per-ROW Python peel,
-    re-lift) measured a REGRESSION at the graded scale — core_numbers
-    4.47s -> 5.59s best-of-2 A/B — and was dropped. The r15 re-attempt
-    changed both cost terms (Arrow ``toPandas`` pull ~10x cheaper than
-    Row collect; numpy bincount/mask rounds instead of Python row
-    loops) and measured a WIN at the same graded scale (fresh-JVM
-    restricted bench, BASELINE.md r15), so :func:`k_core` and
-    :func:`core_numbers` now take the ``_LINK_LOCAL_EDGE_CAP`` local
-    mode like pagerank/hits; this distributed loop is the over-cap
-    path. The peel's fixed point is UNIQUE (removal-schedule
-    independent), so both paths are exactly equal — no float caveat."""
+    Local mode beats this loop only with an Arrow pull and numpy rounds:
+    a Row-object collect with a per-ROW Python peel measured a
+    REGRESSION at the graded scale (core_numbers 4.47s -> 5.59s)."""
     n_prev = alive.count()
     for _ in range(int(max_rounds)):
         survivors = (
@@ -1524,22 +1379,10 @@ def core_numbers(
     if max_core < 1:
         raise ValueError("core_numbers needs max_core >= 1")
     spark = edges.sparkSession
-    both = (
-        edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-        .unionByName(
-            edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-        )
-        .filter(F.col("_u") != F.col("_v"))
-    )
-    if not edges_unique:
-        # see k_core: load-bearing for duplicate inputs, skippable when
-        # the caller asserts one row per unordered pair (r17)
-        both = both.distinct()
-    both = both.localCheckpoint(eager=True)
-    n_edges = both.count()
-    if 0 < n_edges <= _LINK_LOCAL_EDGE_CAP:
+    both, n_edges = _undirected_edges(edges, src, dst, edges_unique)
+    if _local_mode(n_edges):
         import numpy as np
-        from pyspark.sql.types import IntegerType, StructField, StructType
+        import pandas as pd
 
         ids, su, dv = _edge_index(*_collect_pairs(both))
         core = np.ones(len(ids), dtype="int32")
@@ -1554,20 +1397,19 @@ def core_numbers(
                 break
         if len(su):
             core[np.unique(su)] = int(max_core)
-        id_type = both.schema["_u"].dataType
-        import pandas as pd
-
-        schema = StructType(
-            [StructField(out_id, id_type), StructField(out_core, IntegerType())]
-        )
-        return _local_result_df(
+        return local_df(
             spark,
             pd.DataFrame({out_id: ids, out_core: core.astype("int32")}),
-            schema,
+            StructType(
+                [
+                    StructField(out_id, both.schema["_u"].dataType),
+                    StructField(out_core, IntegerType()),
+                ]
+            ),
         )
     assigned: list[DataFrame] = []
     alive = both
-    with _graph_shuffle_conf(spark, n_edges):
+    with sized_shuffle(spark, n_edges):
         for k in range(2, int(max_core) + 1):
             nodes_before = alive.select("_u").distinct()
             core_k = _peel(alive, k, max_rounds)

@@ -1090,13 +1090,13 @@ def bpe_train(
 
         return frame.mapInPandas(run, schema="_syms array<string>, _n long")
 
-    from bigdata_etl_customer360_spark.operators.graph import _graph_shuffle_conf
+    from bigdata_etl_customer360_spark.operators.util import sized_shuffle
 
     merges: list[tuple[int, str, str, str, int]] = []
-    # iterative-operator rule (operators/graph.py): every round pays the
-    # shuffle-partition count; size it to the VOCAB, not the session
-    # default (num_merges x empty-task scheduling dominates otherwise)
-    with _graph_shuffle_conf(spark, n_vocab):
+    # iterative-operator rule: every round pays the shuffle-partition
+    # count; size it to the VOCAB, not the session default (num_merges x
+    # empty-task scheduling dominates otherwise)
+    with sized_shuffle(spark, n_vocab):
         for i in range(int(num_merges)):
             best = (
                 adjacent_pairs(vocab)

@@ -418,19 +418,11 @@ def bucket_pruned_scans(spark: SparkSession):
     setting on exit; session-scoped conf, so don't interleave with
     concurrent queries that need auto-bucketed-scan disabling decisions
     of their own."""
-    import contextlib
+    from bigdata_etl_customer360_spark.operators.util import session_conf
 
-    @contextlib.contextmanager
-    def _cm():
-        conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        prev = spark.conf.get(conf)
-        spark.conf.set(conf, "false")
-        try:
-            yield
-        finally:
-            spark.conf.set(conf, prev)
-
-    return _cm()
+    return session_conf(
+        spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
+    )
 
 
 def compact_lake(spark: SparkSession, table: str, path: str) -> None:

@@ -52,9 +52,9 @@ def write_partitioned_overwrite(
     This is the daily-rerun operating model the reference assumes
     (ETL_customer_behavior.py:161-166 iterates date ranges) but cannot
     express — its JDBC overwrite drops the WHOLE table each run, and a
-    plain parquet ``append`` double-counts on re-run. With
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (scoped to this
-    write, restored after), ``mode('overwrite')`` deletes exactly the
+    plain parquet ``append`` double-counts on re-run. With the per-write
+    ``partitionOverwriteMode=dynamic`` option (the session conf is left
+    alone), ``mode('overwrite')`` deletes exactly the
     partition directories the incoming frame writes — so re-running any
     date window is byte-idempotent, and concurrent runs over DISJOINT
     windows never touch each other's data. At 100 TB this is also the
@@ -73,7 +73,6 @@ def write_partitioned_overwrite(
     requires every column be xxhash64-hashable, i.e. no MapType), or None
     to keep the upstream partitioning as-is.
     """
-    spark = df.sparkSession
     if files_per_partition is not None:
         from pyspark.sql import functions as F
 
@@ -83,13 +82,12 @@ def write_partitioned_overwrite(
             # writers without rand() (stable under task retry)
             cols.append(F.pmod(F.xxhash64(*df.columns), F.lit(files_per_partition)))
         df = df.repartition(*cols)
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def write_parquet(

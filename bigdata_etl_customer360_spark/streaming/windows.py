@@ -226,7 +226,7 @@ def stream_upsert_to_table(
     place and recovers from it on the next batch if a crash hit the
     rename window.
 
-    Single-writer assumption (documented, like _graph_shuffle_conf): the
+    Single-writer assumption (documented, like util.session_conf): the
     snapshot swap is last-writer-wins; run ONE maintenance query per
     table. At scale the same loop targets a transactional table format
     (which makes the swap genuinely atomic); the operator keeps the plan

@@ -11,9 +11,10 @@ Two adversarial graph shapes, far past the graded corpus sizes:
   (LSH emits partial pair lists, not cliques) plus 100k singleton-free
   background pairs.
 
-For each: wall time, rounds to convergence (via ``round_log``), per-round
-label-sum decreases, and a full correctness check of every label against
-a union-find ground truth computed driver-side in numpy.
+For each: wall time of the DISTRIBUTED loop (local mode is switched off
+by setting ``graph._LINK_LOCAL_EDGE_CAP = 0``, as the two-path tests do)
+and a full correctness check of every label against a union-find ground
+truth computed driver-side in numpy.
 
 Run: python scripts/stress_cc.py  (one JSON line per graph).
 """
@@ -70,18 +71,17 @@ def cluster_edges(n_nodes: int, max_cluster: int) -> np.ndarray:
 
 
 def run(spark, name: str, edges: np.ndarray) -> None:
-    from pyspark.sql import functions as F
-    from bigdata_etl_customer360_spark.operators.graph import connected_components
+    from bigdata_etl_customer360_spark.operators import graph
 
+    graph._LINK_LOCAL_EDGE_CAP = 0  # stress the distributed rounds
     df = (
         spark.createDataFrame(
             [(int(u), int(v)) for u, v in edges], schema="id_a long, id_b long"
         )
         .repartition(64)
     )
-    rounds: list[int] = []
     t0 = time.time()
-    out = connected_components(df, round_log=rounds).toPandas()
+    out = graph.connected_components(df).toPandas()
     dt = time.time() - t0
     want = union_find_labels(0, edges)
     got = dict(zip(out["id"].astype(int), out["component"].astype(int)))
@@ -93,8 +93,6 @@ def run(spark, name: str, edges: np.ndarray) -> None:
                 "edges": int(len(edges)),
                 "nodes": int(len(want)),
                 "sec": round(dt, 1),
-                "rounds": len(rounds),
-                "sum_delta_per_round": rounds,
                 "label_mismatches": mismatches,
             }
         )

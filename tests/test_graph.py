@@ -5,6 +5,7 @@ repartitioning, and the reliable-checkpoint variant."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_etl_customer360_spark.operators.graph import (
@@ -652,11 +653,7 @@ def test_cc_local_mode_matches_distributed(spark, monkeypatch):
     """r16: connected_components' small-graph local mode (numpy min-label
     propagation) must equal the distributed loop EXACTLY — component ids
     are a unique integer fixed point. Covers self-loop-only nodes
-    (absent from BOTH paths), duplicate edges, and multiple components;
-    round_log callers must keep the distributed loop. (String ids would
-    keep it too via the numeric-id gate, but the distributed loop's
-    decimal label-sum convergence probe never supported strings — every
-    real caller clusters numeric doc ids.)"""
+    (absent from BOTH paths), duplicate edges, and multiple components."""
     import bigdata_etl_customer360_spark.operators.graph as g
 
     edges = spark.createDataFrame(
@@ -677,9 +674,64 @@ def test_cc_local_mode_matches_distributed(spark, monkeypatch):
     assert 99 not in comp  # self-loop-only: absent on both paths
     monkeypatch.undo()
 
-    # round_log callers keep the distributed loop (per-round observability)
-    log: list[int] = []
-    out = sorted(
-        map(tuple, g.connected_components(edges, round_log=log).collect())
+
+def test_cc_non_integral_ids_raise_before_any_job(spark, monkeypatch):
+    """Non-integral ids are refused up front, before a Spark job runs, on
+    both paths: the distributed loop's decimal label sum cannot take them
+    (CAST_INVALID_INPUT under ANSI; with ANSI off a 13-node string chain
+    came back as 9 components instead of 1)."""
+    import bigdata_etl_customer360_spark.operators.graph as g
+    from bigdata_etl_customer360_spark.operators.util import session_conf
+
+    chain = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)],
+        "id_a string, id_b string",
     )
-    assert out == local and len(log) >= 1
+    sc = spark.sparkContext
+    for cap in (2_000_000, 0):
+        monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", cap)
+        for ansi in ("true", "false"):
+            group = f"cc-string-ids-{cap}-{ansi}"
+            sc.setJobGroup(group, "connected_components on string ids")
+            try:
+                with session_conf(spark, "spark.sql.ansi.enabled", ansi):
+                    with pytest.raises(ValueError, match="integral node ids"):
+                        g.connected_components(chain)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    mixed = spark.createDataFrame([(1, 2.0)], "id_a bigint, id_b double")
+    with pytest.raises(ValueError, match="id_b double"):
+        g.keep_cluster_canonical(mixed, mixed, id_col="id_a")
+
+
+# session confs the graph operators change inside their calls
+_GRAPH_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.limit.initialNumPartitions",
+)
+_GRAPH_OPS = {
+    "connected_components": lambda g, e, s: g.connected_components(e),
+    "pagerank": lambda g, e, s: g.pagerank(e, "id_a", "id_b", iterations=2),
+    "hits": lambda g, e, s: g.hits(e, "id_a", "id_b", iterations=2),
+    "label_propagation": lambda g, e, s: g.label_propagation(e, max_iterations=2),
+    "bfs_distances": lambda g, e, s: g.bfs_distances(e, s, max_depth=3),
+    "k_core": lambda g, e, s: g.k_core(e, 2),
+    "core_numbers": lambda g, e, s: g.core_numbers(e, max_core=3),
+}
+
+
+@pytest.mark.parametrize("path", ["local", "distributed"])
+@pytest.mark.parametrize("op", sorted(_GRAPH_OPS))
+def test_graph_operators_leave_session_conf_as_found(spark, monkeypatch, op, path):
+    import bigdata_etl_customer360_spark.operators.graph as g
+
+    if path == "distributed":
+        monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", 0)
+        monkeypatch.setattr(g, "_BFS_LOCAL_THRESHOLD", 0)
+    edges = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
+    sources = spark.createDataFrame([(1,)], "id bigint")
+    found = {k: spark.conf.get(k, None) for k in _GRAPH_CONFS}
+    assert _GRAPH_OPS[op](g, edges, sources).count() > 0
+    assert {k: spark.conf.get(k, None) for k in _GRAPH_CONFS} == found

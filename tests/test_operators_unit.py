@@ -4271,3 +4271,22 @@ def test_ivfpq_index_compaction(spark, tmp_path):
         assert spark.table(table).count() == 70
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_session_conf_restores_exact_prior_state(spark):
+    """A set key gets its old value back, an unset key is unset again
+    (not pinned to its registered default), also when the block raises."""
+    from bigdata_etl_customer360_spark.operators.util import session_conf
+
+    custom, registered = "c360.test.session_conf", "spark.sql.limit.initialNumPartitions"
+    spark.conf.unset(registered)
+    with session_conf(spark, custom, "a"):
+        with session_conf(spark, custom, "b"), session_conf(spark, registered, "8"):
+            assert (spark.conf.get(custom), spark.conf.get(registered)) == ("b", "8")
+        assert spark.conf.get(custom) == "a"
+    assert spark.conf.get(custom, None) is None
+    assert spark.conf.get(registered, None) is None
+    with pytest.raises(RuntimeError, match="boom"):
+        with session_conf(spark, custom, "c"):
+            raise RuntimeError("boom")
+    assert spark.conf.get(custom, None) is None

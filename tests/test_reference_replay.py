@@ -252,6 +252,32 @@ def test_interaction_incremental_idempotent(spark, tmp_path):
     assert got == want
 
 
+def test_interaction_ingest_leaves_session_conf_alone(spark, tmp_path):
+    """The lake write asks for dynamic partition overwrite per write, so
+    ``partitionOverwriteMode`` is exactly as found afterwards (unset stays
+    unset, STATIC stays STATIC), and a re-run under an explicit STATIC
+    session still replaces only the days it writes."""
+    from bigdata_etl_customer360_spark.operators.util import session_conf
+    from bigdata_etl_customer360_spark.plans.reference_replay import (
+        interaction_ingest_daily,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    paths, _ = _gen_log_content(logs)
+    lake = str(tmp_path / "lake")
+
+    spark.conf.unset(key)
+    interaction_ingest_daily(spark, paths, lake)
+    assert spark.conf.get(key, None) is None
+    once = _profile_rows(spark.read.parquet(lake))
+    with session_conf(spark, key, "STATIC"):
+        interaction_ingest_daily(spark, paths[9:20], lake)
+        assert spark.conf.get(key) == "STATIC"
+    assert _profile_rows(spark.read.parquet(lake)) == once
+
+
 def test_interaction_lake_window_prunes_partitions(spark, tmp_path):
     """start/end become partition filters: a windowed profile equals the
     one-shot pipeline over just those days, and the scan plan carries the
