@@ -2917,20 +2917,18 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bfs_chain_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tiny-frontier LOCAL-mode certificate for bfs_distances (r13,
-    VERDICT r12 task 5): the adversarial long-diameter shape — all
-    documents chained by ascending doc_id (lead-window edges), ONE
-    source at the TOP id, max_depth=20. After the round-0 seed count the
-    whole traversal runs in the driver-side local mode (frontier is 1-2
-    nodes, every pull a capped edge-slice job), so the driver grading
-    pins ~20 local rounds against a CLOSED-FORM oracle: the reachable
-    set is exactly the top 21 ids, each at its rank distance. The
-    distributed path cannot drift either way — the distances are a
-    unique fixed point — so any local/distributed divergence, off-by-one
-    round accounting, or cap-bail corruption hash-mismatches loudly.
-    (The lead-window chain build is a single-task sort over the doc-id
-    dim — fine for a graded dim table; chain CONSTRUCTION is test rig,
-    not the operator under test.)"""
+    """Long-diameter certificate for bfs_distances: all documents
+    chained by ascending doc_id (lead-window edges), ONE source at the
+    TOP id, max_depth=20. The chain is under the graph family's edge
+    cap, so the traversal runs in the shared whole-graph local mode (one
+    edge pull, 20 numpy relaxation rounds), and the driver grading pins
+    those rounds against a CLOSED-FORM oracle: the reachable set is
+    exactly the top 21 ids, each at its rank distance. The distances
+    are a unique fixed point, so any local/distributed divergence or
+    off-by-one round accounting hash-mismatches loudly. (The lead-window
+    chain build is a single-task sort over the doc-id dim — fine for a
+    graded dim table; chain CONSTRUCTION is test rig, not the operator
+    under test.)"""
     from pyspark.sql import Window
 
     from bigdata_etl_customer360_spark.operators.graph import bfs_distances

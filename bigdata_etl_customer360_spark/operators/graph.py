@@ -19,17 +19,18 @@ jobs — a convergence loop needs actions — and share one contract:
   Where the count feeds degrees or votes (k_core, core_numbers, LPA) the
   distinct is load-bearing for inputs with duplicate pairs; for
   connected components and BFS a duplicate only adds message volume.
-- **Local mode.** When the counted edge total is at most
-  ``_LINK_LOCAL_EDGE_CAP`` (:func:`_local_mode`), one bounded Arrow
-  ``toPandas`` pull (:func:`_collect_pairs`) feeds numpy rounds over
-  sorted-id index arrays (:func:`_edge_index`) with the distributed
-  rounds' exact update rules, and the result is lifted back through
-  ``util.local_df``. At the graded sizes each distributed round is
+- **Local mode.** All seven iterative operators share one contract:
+  when the counted edge total is at most ``_LINK_LOCAL_EDGE_CAP``
+  (:func:`_local_mode`, the only place a path is chosen), one bounded
+  Arrow ``toPandas`` pull of the prepared edge frame
+  (:func:`_collect_pairs`, every column — BFS carries its weights)
+  feeds numpy rounds over sorted-id index arrays (:func:`_edge_index`)
+  with the distributed rounds' exact update rules, and the result is
+  lifted back through ``util.local_df`` with the schema the distributed
+  path returns. At the graded sizes each distributed round is
   ~0.5-0.9s of scheduling floor (join + agg stages, checkpoint), not
   compute, and a 1.3M-edge graph is ~30 MB of longs. The decision is
-  upfront because every round touches every edge. :func:`bfs_distances`
-  has its own tiny-FRONTIER local mode instead (a long chain is huge in
-  edges but needs only a few pulled slices).
+  upfront because every round touches every edge.
 - **Exactness.** Connected components, k_core, core_numbers, LPA and BFS
   are integer fixed points (component min id, peel survivors, pinned
   tie-broken labels, min hops), so local mode equals the distributed
@@ -121,21 +122,21 @@ def _undirected_edges(
 
 
 def _collect_pairs(e: DataFrame):
-    """Local mode's one bounded edge pull, the first two columns of ``e``
-    as numpy arrays. Arrow ``toPandas``: a 1.3M-row ``collect()`` of Row
-    objects costs more than the numpy rounds it feeds (~10x)."""
+    """Local mode's one bounded edge pull: every column of ``e``, in
+    order, as numpy arrays. Arrow ``toPandas``: a 1.3M-row ``collect()``
+    of Row objects costs more than the numpy rounds it feeds (~10x)."""
     with session_conf(
         e.sparkSession, "spark.sql.execution.arrow.pyspark.enabled", "true"
     ):
         pdf = e.toPandas()
-    a, b = e.columns[:2]
-    return pdf[a].to_numpy(), pdf[b].to_numpy()
+    return tuple(pdf[c].to_numpy() for c in e.columns)
 
 
-def _edge_index(sarr, darr):
+def _edge_index(sarr, darr, *payload):
     """Sorted-id index arrays for the local loops: returns
-    (ids, src_idx, dst_idx) with edges sorted by (src, dst) so the
-    bincount accumulation order is a pure function of the edge SET.
+    (ids, src_idx, dst_idx, *payload) with edges sorted by (src, dst) so
+    the bincount accumulation order is a pure function of the edge SET;
+    each per-edge ``payload`` array comes back in that same order.
     ``pd.factorize(sort=True)`` assigns codes in sorted-unique order
     (value order == code order for numeric AND string ids) at C speed —
     the object-dtype python-sort path this replaces cost more than the
@@ -148,7 +149,7 @@ def _edge_index(sarr, darr):
     n = len(sarr)
     su, dv = codes[:n].astype("int64"), codes[n:].astype("int64")
     order = np.lexsort((dv, su))
-    return np.asarray(uniques), su[order], dv[order]
+    return (np.asarray(uniques), su[order], dv[order], *(p[order] for p in payload))
 
 
 def connected_components(
@@ -430,19 +431,18 @@ def pagerank(
     m = e.count()
 
     if _local_mode(m):
-        # the seed set collects distinct (bounded by the node count it
-        # must intersect to matter)
-        seed_vals = None
-        if seeds is not None:
-            seed_vals = {
-                r[0]
-                for r in seeds.select(F.col(seed_col)).distinct().collect()
-            }
-        pairs = _collect_pairs(e)
-        id_type = e.schema["_s"].dataType
         try:
+            # the seed set collects distinct (bounded by the node count it
+            # must intersect to matter)
+            seed_vals = None
+            if seeds is not None:
+                seed_vals = {
+                    r[0]
+                    for r in seeds.select(F.col(seed_col)).distinct().collect()
+                }
             return _pagerank_local(
-                spark, pairs, id_type, damping, iterations, seed_vals
+                spark, _collect_pairs(e), e.schema["_s"].dataType, damping,
+                iterations, seed_vals,
             )
         finally:
             e.unpersist()
@@ -829,15 +829,6 @@ def label_propagation(
     return out
 
 
-# Tiny-frontier local-mode bounds (bfs_distances): the mode engages only
-# when a probe shows the reached set at or below the node threshold, and
-# every per-round edge pull is capped — breach either and the loop falls
-# back to the distributed rounds. Sized so the driver state stays a few
-# MB at worst (nodes x 2 longs; slice rows x 3 longs).
-_BFS_LOCAL_THRESHOLD = 10_000
-_BFS_SLICE_CAP = 200_000
-
-
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -860,6 +851,8 @@ def bfs_distances(
     Output: ``(out_id, out_dist)`` for every node within ``max_depth``
     hops of any source (unreached nodes are absent — attach with a left
     join if needed). Sources at distance 0 even if absent from ``edges``.
+    ``out_id`` has the type of ``sources[source_id]`` unioned with the
+    edge ids on both paths.
 
     ``weight_col``: integer edge weights turn this into bounded-hop
     SSSP (Bellman-Ford relaxation — round k is optimal over paths of at
@@ -868,47 +861,21 @@ def bfs_distances(
     optimum and therefore also matches). Integer weights keep every cost
     exact — quantize float weights upstream (the repo-wide rule).
 
-    Scale shape, per distributed round: dist JOIN edges [shuffle on node]
-    -> neighbor candidates at d+1 (or d+w) -> union + ONE min-agg ->
-    convergence via the monotone 1-row (count, sum) check (costs only
-    decrease, nodes only appear — stable ⟺ no edge relaxed ⟺ done).
-    Rounds ≤ min(max_depth, diameter).
-
-    Tiny-frontier local mode (VERDICT r12 task 5): when the frontier is
-    tiny but the edge list is huge (a long chain from one source), each
-    distributed round costs ~0.44s of pure scheduling floor (join +
-    agg stages, checkpoint, probe), not compute — a 200k-node chain
-    pays rounds x floor. So once a probe shows the reached set at or
-    below ``_BFS_LOCAL_THRESHOLD`` nodes, the loop switches to a
-    driver-side advance: collect the (bounded) distance map, and per
-    round pull ONLY the edge slice adjacent to frontier nodes not yet
-    cached (one broadcast-semi-join job — no shuffle, no checkpoint, no
-    probe), then relax synchronously in Python exactly as the
-    distributed rounds do. Frontier-only relaxation is equivalent to
-    full synchronous relaxation (an unchanged node re-relaxes to the
-    same values), so distances are IDENTICAL — pinned by the
-    stress_bfs numpy mirror and the unchanged recursive-CTE oracle.
-    Every driver-side structure is guarded: the mode only starts below
-    the node threshold, each pull is capped (``limit(cap+1)`` detects
-    overflow without collecting it), and breaching any cap — a hub in
-    the slice, the reached set outgrowing the threshold — falls back to
-    the distributed loop with the current distances re-lifted and
-    checkpointed. Measured (scripts/stress_bfs.py): chain_200k 10.2s ->
-    6.8s inside the stress run (4.6s warm standalone — the residue is
-    the one-time edge-frame build, not rounds), distances exact;
-    heavy-frontier graphs (zipf_web) bail on the first pull's cap and
-    keep the exact probe-every-round early stop, within host noise.
-    The pull uses a literal IN filter over a narrowly coalesced slice
-    of the checkpointed edges with limit.initialNumPartitions pinned to
-    the slice width — measured 6x cheaper per pull than a broadcast
-    join + default incremental CollectLimit.
+    Every round relaxes every edge from the PREVIOUS round's distances;
+    at most ``max_depth`` rounds, stopping early when one changes
+    nothing. Local mode (module docstring) runs those rounds as
+    ``np.minimum.at`` over the pulled edge list in exact int64. The
+    distributed round is dist JOIN edges [shuffle on node] -> neighbor
+    candidates at d+w -> union + ONE min-agg, converged when the 1-row
+    (count, sum) is stable (costs only decrease, nodes only appear —
+    stable ⟺ no edge relaxed). Measured on the traced ``graph_iterative``
+    perfbench workload (seed 1, 4-core host): 12 Spark jobs per call in
+    local mode (``graph.bfs.jobs`` 36 over 3 ops).
     """
     spark = edges.sparkSession
     if weight_col is not None:
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
         wt = edges.schema[weight_col].dataType
-        if not isinstance(wt, (ByteType, ShortType, IntegerType, LongType)):
+        if not isinstance(wt, IntegralType):
             raise ValueError(
                 f"weight_col {weight_col!r} has type {wt.simpleString()}; "
                 "integer weights are required (a silent cast would "
@@ -921,119 +888,53 @@ def bfs_distances(
     both, n_edges = _undirected_edges(
         edges, src, dst, edges_unique, w_expr.alias("_w")
     )
-
     dist = sources.select(
         F.col(source_id).alias("_id"), F.lit(0).cast("long").alias("_d")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct()
 
-    adj: dict[int, list[tuple[int, int]]] = {}
-    # pull source: same checkpointed blocks, narrowly coalesced so each
-    # tiny frontier pull schedules a handful of tasks, not one per
-    # cluster-width partition (the pull is a scan + broadcast semi-join;
-    # its cost is task launch, not compute)
-    both_pull = both.coalesce(8)
+    if _local_mode(n_edges):
+        import numpy as np
+        import pandas as pd
 
-    def _advance_local(
-        dist_map: dict[int, int], done: int
-    ) -> tuple[dict[int, int], int, bool]:
-        """Driver-side synchronous relaxation while every bound holds.
-        Returns (dist_map, rounds_done, converged); a cap breach returns
-        converged=False with the rounds already advanced (all complete,
-        correct rounds — a pull/size overflow aborts BEFORE relaxing)."""
-        frontier = set(dist_map)  # conservative on entry: relax from all
-        while done < int(max_depth):
-            need = [u for u in frontier if u not in adj]
-            if need:
-                if len(need) <= 1_000:
-                    # literal IN predicate: no broadcast-build job, the
-                    # scan task is the whole pull (~6x cheaper measured)
-                    sliced = both_pull.filter(
-                        F.col("_u").isin([int(u) for u in need])
-                    )
-                else:
-                    need_df = spark.createDataFrame(
-                        [(int(u),) for u in need], "u long"
-                    )
-                    sliced = both_pull.join(
-                        F.broadcast(need_df), both_pull["_u"] == F.col("u")
-                    )
-                pulled = (
-                    sliced.select("_u", "_v", "_w")
-                    .limit(_BFS_SLICE_CAP + 1)
-                    .collect()
-                )
-                if len(pulled) > _BFS_SLICE_CAP:
-                    return dist_map, done, False
-                for u in need:
-                    adj[u] = []
-                for r in pulled:
-                    adj[r["_u"]].append((r["_v"], r["_w"]))
-            # pre-relax growth guard: every new node comes from a pulled
-            # edge, so edge count bounds node growth — bail BEFORE
-            # relaxing a hub frontier, keeping dist_map (and the bail
-            # path's driver->cluster re-lift) at threshold size always
-            possible_new = sum(len(adj[u]) for u in frontier)
-            if len(dist_map) + possible_new > _BFS_LOCAL_THRESHOLD:
-                return dist_map, done, False
-            new_map = dict(dist_map)
-            for u in frontier:
-                du = dist_map[u]
-                for v, w in adj[u]:
-                    nd = du + w
-                    if v not in new_map or nd < new_map[v]:
-                        new_map[v] = nd
-            changed = {
-                v for v in new_map
-                if v not in dist_map or new_map[v] != dist_map[v]
-            }
-            done += 1
-            dist_map = new_map
-            if not changed:
-                return dist_map, done, True
-            frontier = changed
-            if len(dist_map) > _BFS_LOCAL_THRESHOLD:
-                return dist_map, done, False
-        return dist_map, done, True
+        # the id type the distributed loop's unionByName yields (analysis
+        # only, no job), so both paths return the same schema
+        id_type = dist.unionByName(
+            both.select(F.col("_v").alias("_id"), F.col("_w").alias("_d"))
+        ).schema["_id"].dataType
+        ids, su, dv, w = _edge_index(*_collect_pairs(both))
+        seed_vals = [r["_id"] for r in dist.collect()]
+        at = pd.Index(ids).get_indexer(seed_vals)
+        inf = np.iinfo("int64").max
+        d = np.full(len(ids), inf, dtype="int64")
+        d[at[at >= 0]] = 0
+        for _ in range(int(max_depth)):
+            new = d.copy()
+            frm = d[su]
+            ok = frm < inf  # unreached sources: INF + w would wrap
+            np.minimum.at(new, dv[ok], frm[ok] + w[ok])
+            if np.array_equal(new, d):
+                break
+            d = new
+        hit = d < inf
+        out = pd.DataFrame({out_id: ids[hit], out_dist: d[hit]})
+        absent = [v for v, i in zip(seed_vals, at) if i < 0]
+        if absent:  # seeds without an edge: distance 0, reach nothing
+            out = pd.concat(
+                [out, pd.DataFrame({out_id: absent, out_dist: 0})],
+                ignore_index=True,
+            )
+        return local_df(
+            spark,
+            out,
+            StructType(
+                [StructField(out_id, id_type), StructField(out_dist, LongType())]
+            ),
+        )
 
+    dist = dist.localCheckpoint(eager=True)
     with sized_shuffle(spark, n_edges):
         prev_sum = None
-        done = 0
-        # sources are checkpointed; this count lets a tiny seed set enter
-        # local mode at round 0 instead of paying one distributed round
-        known_n = dist.count()
-        allow_local = True
-        while done < int(max_depth):
-            if allow_local and known_n <= _BFS_LOCAL_THRESHOLD:
-                dist_map = {r["_id"]: r["_d"] for r in dist.collect()}
-                # the pull's limit must scan all 8 coalesced partitions in
-                # ONE job: the slice is far under the cap, so the default
-                # incremental CollectLimit (1 partition, then scale up)
-                # degenerates to 2-3 jobs per pull (measured 3x slower)
-                with session_conf(
-                    spark, "spark.sql.limit.initialNumPartitions", "8"
-                ):
-                    dist_map, done, converged = _advance_local(dist_map, done)
-                import pandas as pd
-
-                dist = local_df(
-                    spark,
-                    pd.DataFrame(
-                        {"_id": list(dist_map.keys()),
-                         "_d": list(dist_map.values())}
-                    ).astype("int64"),
-                    "_id long, _d long",
-                )
-                if converged:
-                    break
-                # cap breach: re-lift and continue distributed, and keep
-                # local mode CLOSED for the rest of the call — a breach
-                # means the frontier's neighborhood outgrew the caps, and
-                # a still-tiny reached set next probe would just re-pull
-                # the same oversized slice (ping-pong)
-                dist = dist.localCheckpoint(eager=True)
-                prev_sum = None
-                allow_local = False
-                continue
+        for _ in range(int(max_depth)):
             cand = (
                 dist.join(both, dist["_id"] == both["_u"])
                 .select(F.col("_v").alias("_id"), (F.col("_d") + F.col("_w")).alias("_d"))
@@ -1051,11 +952,9 @@ def bfs_distances(
             ).first()
             cur = (agg["n"], agg["s"])
             dist = new_dist
-            done += 1
             if cur == prev_sum:
                 break
             prev_sum = cur
-            known_n = cur[0]
     return dist.select(F.col("_id").alias(out_id), F.col("_d").alias(out_dist))
 
 
@@ -1155,10 +1054,10 @@ def hits(
     m = e.count()
 
     if _local_mode(m):
-        pairs = _collect_pairs(e)
-        id_type = e.schema["_s"].dataType
         try:
-            return _hits_local(spark, pairs, id_type, iterations)
+            return _hits_local(
+                spark, _collect_pairs(e), e.schema["_s"].dataType, iterations
+            )
         finally:
             e.unpersist()
 

@@ -42,21 +42,25 @@ _BUILD_CONF: dict[str, str] = {
 
 # Sessions already tuned, keyed WEAKLY on the Python SparkSession object:
 # every _t()/load_table call re-applied the 5 runtime confs (5 py4j round
-# trips, ~2-5 ms) — ~1-2 s across a 235-query bench run for settings that
-# never change after the first application (r17). A new wrapper object
-# (fresh session, clone, restart) re-tunes; dead wrappers drop out of the
-# set automatically.
+# trips, ~2-5 ms) — ~1-2 s across a 235-query bench run (r17). A new
+# wrapper object (fresh session, clone, restart) re-tunes; dead wrappers
+# drop out of the set automatically. The time zone alone is re-pinned on
+# every call (one py4j round trip): results depend on it, and a driver
+# that owns the session may change it between query builds.
 _TUNED: weakref.WeakSet = weakref.WeakSet()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an existing session (once per
-    session object — see ``_TUNED``).
+    session object — see ``_TUNED``), and re-pin the UTC session time
+    zone on every call.
 
     Used by ``__spark_entry__.queries()`` where the driver owns the
     session: only runtime-mutable confs are touched.
     """
     if spark in _TUNED:
+        tz = "spark.sql.session.timeZone"
+        spark.conf.set(tz, _RUNTIME_CONF[tz])
         return spark
     for k, v in _RUNTIME_CONF.items():
         try:

@@ -20,9 +20,14 @@ Three runs, far past the graded size:
   list is huge (the early-stop cannot fire; depth is the cap).
 
 The numpy mirror relaxes ALL edges from the PREVIOUS round's distances
-each round (synchronous, mirroring dist JOIN edges -> union -> min-agg,
-graph.py:685-707) with exact int64 arithmetic; unreached nodes are
-absent on both sides. Equality is exact, not a tolerance.
+each round (synchronous, mirroring both paths of
+``operators/graph.bfs_distances``: the distributed dist JOIN edges ->
+union -> min-agg round and the local mode's ``np.minimum.at`` round)
+with exact int64 arithmetic; unreached nodes are absent on both sides.
+Equality is exact, not a tolerance. All three graphs are under the
+graph family's 2M-edge local-mode cap (chain: 400k symmetrized edges),
+so they run the local mode; set ``graph._LINK_LOCAL_EDGE_CAP = 0`` to
+stress the distributed loop instead.
 
 Run: python scripts/stress_bfs.py  (one JSON line per run).
 """

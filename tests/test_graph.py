@@ -5,6 +5,9 @@ repartitioning, and the reliable-checkpoint variant."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +15,12 @@ from bigdata_etl_customer360_spark.operators.graph import (
     connected_components,
     keep_cluster_canonical,
 )
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+)
+
+from stress_bfs import np_bfs  # noqa: E402
 
 
 def _edges(spark, pairs):
@@ -278,29 +287,91 @@ def test_bfs_distances_weighted_prefers_cheap_long_path(spark):
     assert one == {0: 0, 1: 1, 3: 10}
 
 
-def test_bfs_local_mode_growth_guard_bails_to_distributed(spark):
-    """Tiny-frontier local mode (VERDICT r12 task 5): a source whose
-    neighborhood outgrows the node threshold must bail BEFORE relaxing
-    driver-side and fall back to the distributed rounds with identical
-    results — here a 15k-leaf star (> _BFS_LOCAL_THRESHOLD = 10k) from a
-    single source; the chain/multisource tests above exercise the local
-    path itself (their reached sets stay tiny throughout)."""
-    from pyspark.sql import functions as F
+def test_bfs_local_mode_matches_distributed(spark, monkeypatch):
+    """BFS's whole-graph local mode (numpy rounds over the one pulled
+    edge list) must equal the distributed loop EXACTLY, and both must
+    equal the numpy mirror: seeded random graphs, unweighted and
+    weighted, an isolated source, a max_depth truncation, and a
+    15k-leaf star from a single source."""
+    import numpy as np
 
-    from bigdata_etl_customer360_spark.operators.graph import (
-        _BFS_LOCAL_THRESHOLD,
-        bfs_distances,
-    )
+    import bigdata_etl_customer360_spark.operators.graph as g
 
-    n = _BFS_LOCAL_THRESHOLD + 5_000
-    star = spark.range(1, n + 1).select(
-        F.lit(0).alias("id_a"), F.col("id").alias("id_b")
-    )
-    src = spark.createDataFrame([(0,)], schema="id long")
-    got = {r["id"]: r["dist"] for r in bfs_distances(star, src, max_depth=3).collect()}
-    assert got[0] == 0
-    assert len(got) == n + 1
-    assert all(d == 1 for k, d in got.items() if k != 0)
+    rng = np.random.default_rng(11)
+    cases = []
+    for weighted in (False, True):
+        a = rng.integers(0, 40, size=90)
+        b = rng.integers(0, 40, size=90)
+        w = rng.integers(1, 10, size=90) if weighted else np.ones(90, "int64")
+        cases.append((np.stack([a, b], axis=1), w, [0, 7, 999], 20, weighted))
+    cases.append((cases[1][0], cases[1][1], [3], 2, True))  # truncated
+    n = 15_000
+    star = np.stack([np.zeros(n, "int64"), np.arange(1, n + 1)], axis=1)
+    cases.append((star, np.ones(n, "int64"), [0], 3, False))
+
+    for edges, w, seeds, depth, weighted in cases:
+        e = spark.createDataFrame(
+            [(int(x), int(y), int(c)) for (x, y), c in zip(edges, w)],
+            "id_a long, id_b long, w long",
+        )
+        s = spark.createDataFrame([(x,) for x in seeds], "id long")
+        kw = {"weight_col": "w"} if weighted else {}
+        got = []
+        for cap in (2_000_000, 0):
+            monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", cap)
+            got.append(
+                {
+                    r["id"]: r["dist"]
+                    for r in g.bfs_distances(e, s, max_depth=depth, **kw).collect()
+                }
+            )
+        want = np_bfs(edges.astype("int64"), w.astype("int64"), seeds, depth)
+        assert got[0] == got[1] == want
+    assert want[0] == 0 and len(want) == n + 1  # the star: every leaf at 1
+
+
+def test_bfs_ids_keep_their_type_on_both_paths(spark, monkeypatch):
+    """String and int node ids come back with the same rows and the same
+    schema whichever path runs: the id type is the distributed loop's
+    union of the source and edge id types."""
+    import bigdata_etl_customer360_spark.operators.graph as g
+
+    cases = [
+        ("string", [("a", "b"), ("b", "c"), ("c", "d")], "a",
+         {"a": 0, "b": 1, "c": 2, "d": 3}),
+        ("int", [(1, 2), (2, 3), (3, 4)], 1, {1: 0, 2: 1, 3: 2, 4: 3}),
+    ]
+    for typ, pairs, seed, want in cases:
+        e = spark.createDataFrame(pairs, f"id_a {typ}, id_b {typ}")
+        s = spark.createDataFrame([(seed,)], f"id {typ}")
+        out = []
+        for cap in (2_000_000, 0):
+            monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", cap)
+            df = g.bfs_distances(e, s)
+            out.append((df.schema, {r["id"]: r["dist"] for r in df.collect()}))
+        assert out[0] == out[1], typ
+        assert out[0][1] == want
+        assert out[0][0].simpleString() == f"struct<id:{typ},dist:bigint>"
+
+
+@pytest.mark.parametrize("op", ["pagerank", "hits"])
+def test_link_local_mode_failed_pull_releases_edge_cache(spark, monkeypatch, op):
+    """A failed local-mode edge pull must not leave the cached edge frame
+    persisted for the rest of the session."""
+    import bigdata_etl_customer360_spark.operators.graph as g
+
+    def boom(e):
+        raise RuntimeError("pull failed")
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    seeds = spark.createDataFrame([(1,)], "id long")
+    kw = {"seeds": seeds} if op == "pagerank" else {}
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(g, "_collect_pairs", boom)
+    with pytest.raises(RuntimeError, match="pull failed"):
+        getattr(g, op)(edges, iterations=2, **kw)
+    assert jsc.getPersistentRDDs().size() <= before
 
 
 def test_pagerank_personalized_matches_numpy(spark):
@@ -729,7 +800,6 @@ def test_graph_operators_leave_session_conf_as_found(spark, monkeypatch, op, pat
 
     if path == "distributed":
         monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", 0)
-        monkeypatch.setattr(g, "_BFS_LOCAL_THRESHOLD", 0)
     edges = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
     sources = spark.createDataFrame([(1,)], "id bigint")
     found = {k: spark.conf.get(k, None) for k in _GRAPH_CONFS}

@@ -4290,3 +4290,19 @@ def test_session_conf_restores_exact_prior_state(spark):
         with session_conf(spark, custom, "c"):
             raise RuntimeError("boom")
     assert spark.conf.get(custom, None) is None
+
+
+def test_tune_session_repins_utc_on_every_call(spark):
+    """A session tuned once and then moved off UTC (a driver that owns
+    the session and changes its time zone between builds) is put back on
+    UTC by the next tune_session call; the other confs stay memoized."""
+    from bigdata_etl_customer360_spark.session import tune_session
+
+    tz = "spark.sql.session.timeZone"
+    tune_session(spark)
+    try:
+        spark.conf.set(tz, "America/Los_Angeles")
+        assert tune_session(spark) is spark
+        assert spark.conf.get(tz) == "UTC"
+    finally:
+        spark.conf.set(tz, "UTC")
