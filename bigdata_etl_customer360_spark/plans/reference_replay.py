@@ -15,8 +15,9 @@ Differences from the reference are deliberate plan-shape fixes (SURVEY §4):
 one multi-path scan instead of per-day union folds; explicit schemas (no
 inference jobs); ONE pivot-aggregate after the union instead of 30 per-day
 pivots; date derived from the file path instead of a per-day literal;
-deterministic top-1 tie-break; classification distributed via mapInPandas
-instead of a 10k-row driver collect.
+deterministic top-1 tie-break; classification inside the engine
+(``classify_column``: keyword rules as a native CASE projection, other
+classifiers in mapInPandas) instead of a 10k-row driver collect.
 """
 
 from __future__ import annotations
@@ -301,7 +302,7 @@ def behavior_pipeline(
     classifier,
 ) -> DataFrame:
     """Month-over-month search-behavior trend (ETL_customer_behavior.py
-    :160-204 end-to-end), classification distributed via mapInPandas
+    :160-204 end-to-end), classification through ``classify_column``
     (no driver collect, no 10k-row silent cap — the reference's
     ``limit(10000)`` at :33 truncates its own input).
 

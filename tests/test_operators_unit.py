@@ -176,9 +176,86 @@ def test_gemini_transport_request_shape_and_parse():
 
 def test_classify_column_null_keys_get_fallback(spark):
     df = spark.createDataFrame([("stream wars", 1), (None, 2)], ["text", "id"])
-    c = RuleClassifier({"S": ["stream"]}, fallback="Other")
-    got = {r["id"]: r["category"] for r in classify_column(df, "text", c).collect()}
-    assert got == {1: "S", 2: "Other"}
+    # a label without keywords never matches; without any keyword every
+    # key takes the fallback
+    for rules, want in [
+        ({"S": ["stream"]}, {1: "S", 2: "Other"}),
+        ({"E": [], "S": ["stream"]}, {1: "S", 2: "Other"}),
+        ({}, {1: "Other", 2: "Other"}),
+    ]:
+        c = RuleClassifier(rules, fallback="Other")
+        got = {r["id"]: r["category"] for r in classify_column(df, "text", c).collect()}
+        assert got == want
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_classify_column_rules_are_one_native_projection(spark):
+    """RuleClassifier labels are a projection over the input's plan: no
+    Python node, no broadcast, no Exchange beyond the input's own; the
+    columns keep the using-join order (key, the rest, label)."""
+    from bigdata_etl_customer360_spark.operators.util import plan_summary
+
+    df = spark.createDataFrame(
+        [(1, "en", "Stream wars"), (2, "de", None), (3, "fr", "a MERGE")],
+        ["id", "lang", "text"],
+    ).repartition(3, "id")
+    out = classify_column(df, "text", RuleClassifier({"S": ["stream"], "J": ["merge"]}))
+    plan = _executed_plan(out)
+    assert "MapInPandas" not in plan and "BroadcastExchange" not in plan
+    assert plan_summary(out)["exchanges"] == plan_summary(df)["exchanges"] == 1
+    assert out.columns == ["text", "id", "lang", "category"]
+    got = {r["id"]: r["category"] for r in out.collect()}
+    assert got == {1: "S", 2: "Other", 3: "J"}
+
+
+def test_classify_column_python_path_batch_prompt_classifier(spark):
+    """A classifier without to_case_sql goes through mapInPandas once per
+    distinct key: labels the transport returns land on every row with that
+    key; null keys, keys the reply omits and invalid labels get the
+    fallback."""
+    import json as _json
+
+    def transport(prompt: str) -> str:
+        items = _json.loads(prompt[prompt.index("Items: ") + 7:])
+        return _json.dumps(
+            {k: ("Sports" if "ball" in k else "Bogus") for k in items if k != "skip"}
+        )
+
+    c = BatchPromptClassifier(transport, labels=["Sports", "News"], batch_size=2)
+    df = spark.createDataFrame(
+        [(1, "football"), (2, "football"), (3, "weird"), (4, "skip"), (5, None), (6, "handball")],
+        ["id", "text"],
+    )
+    out = classify_column(df, "text", c, chunk_size=3)
+    assert "MapInPandas" in _executed_plan(out)
+    assert out.columns == ["text", "id", "category"]
+    got = {r["id"]: r["category"] for r in out.collect()}
+    assert got == {1: "Sports", 2: "Sports", 3: "Other", 4: "Other", 5: "Other", 6: "Sports"}
+
+
+def test_classify_column_rules_with_spark_literal_escapes_take_python_path(spark):
+    """Spark's SQL parser unescapes backslashes and substitutes ${...} in
+    string literals, so rules with either in a keyword, label or fallback
+    keep the Python path and label exactly as classify_batch does."""
+    import pandas as pd
+
+    keys = ["a\\tb", "x${y}z", "xz", None]
+    df = spark.createDataFrame(list(enumerate(keys)), "id int, text string")
+    for rules, fallback in [
+        ({"B": ["a\\tb"]}, "F"),
+        ({"V": ["${y}"]}, "F"),
+        ({"l\\n": ["xz"]}, "F"),
+        ({"S": ["xz"]}, "${user.home}"),
+    ]:
+        c = RuleClassifier(rules, fallback=fallback)
+        out = classify_column(df, "text", c)
+        assert "MapInPandas" in _executed_plan(out)
+        got = [r["category"] for r in out.orderBy("id").collect()]
+        batch = c.classify_batch(pd.Series(keys[:3], dtype="object")).tolist()
+        assert got == [*batch, fallback]
 
 
 # --- dedup -------------------------------------------------------------------
@@ -4306,3 +4383,26 @@ def test_tune_session_repins_utc_on_every_call(spark):
         assert spark.conf.get(tz) == "UTC"
     finally:
         spark.conf.set(tz, "UTC")
+
+
+def test_scan_memo_is_per_session(spark):
+    """Two sessions of one application, each with its own time zone, read
+    ``events`` once each and get a scan bound to themselves. The testdata
+    stores ``ts`` as wall-clock time, which the parquet reader places in
+    the reading session's zone, so the same row's instant is 9 hours
+    earlier for the Tokyo session than for the UTC one."""
+    from bigdata_etl_customer360_spark.sources.testdata import load_table
+
+    tz = "spark.sql.session.timeZone"
+    a, b = spark.newSession(), spark.newSession()
+    a.conf.set(tz, "UTC")
+    b.conf.set(tz, "Asia/Tokyo")
+
+    def instants(sess):
+        ev = load_table(sess, "events")
+        assert ev.sparkSession is sess
+        rows = ev.orderBy("event_id").limit(20).select(F.unix_micros("ts")).collect()
+        return [r[0] for r in rows]
+
+    tokyo = instants(b)
+    assert instants(a) == [t + 9 * 3600 * 10**6 for t in tokyo]

@@ -6,15 +6,21 @@ reference implementations. Each example set is batched into ONE Spark job
 from __future__ import annotations
 
 import math
+import unicodedata
 from collections import Counter, defaultdict
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdata_etl_customer360_spark.functions.expressions import bucketize_expr
-from bigdata_etl_customer360_spark.operators.enrich import RuleClassifier
+from bigdata_etl_customer360_spark.operators.enrich import (
+    SPARK_ONLY_LOWER_IMAGES,
+    RuleClassifier,
+    _native_rules,
+    classify_column,
+)
 from bigdata_etl_customer360_spark.operators.relational import pivot_agg, top_k_per_group
 
 SETTINGS = settings(
@@ -139,6 +145,87 @@ def test_rule_classifier_sql_metachars_spark_side(spark):
     got = [r["lbl"] for r in df.select(F.expr(c.to_case_sql("k")).alias("lbl")).collect()]
     py = c.classify_batch(pd.Series(keys, dtype="object")).tolist()
     assert got == py == ["P", "F", "U", "F", "Q", "F"]
+
+
+def _classify_both(spark, c, keys):
+    """(classify_column's labels, the Python path's labels) for ``keys``:
+    null keys take the fallback, every other key ``classify_batch``."""
+    df = spark.createDataFrame(list(enumerate(keys)), "id int, k string")
+    got = [r["category"] for r in classify_column(df, "k", c).orderBy("id").collect()]
+    batch = c.classify_batch(pd.Series(keys, dtype="object")).tolist()
+    return got, [c.fallback if k is None else b for k, b in zip(keys, batch)]
+
+
+def test_spark_lower_disagrees_with_python_only_on_gated_code_points(spark):
+    """The native-rules gate rests on a measured fact: wherever Spark's
+    ``lower`` and Python's ``str.lower`` disagree on a code point, the
+    source is unassigned in Python's Unicode database and Spark's image is
+    unassigned too or in SPARK_ONLY_LOWER_IMAGES. One Spark job sweeps every
+    non-surrogate code point in context (``"x" + chr(c) + "x"``); a JVM,
+    ICU or Python upgrade that moves the fact fails here."""
+
+    def sweep(batches):
+        for b in batches:
+            cps = [c for c in b["id"].tolist() if not 0xD800 <= c <= 0xDFFF]
+            s = ["x" + chr(c) + "x" for c in cps]
+            yield pd.DataFrame({"cp": cps, "s": s, "py": [t.lower() for t in s]})
+
+    diff = (
+        spark.range(0, 0x110000, numPartitions=4)
+        .mapInPandas(sweep, "cp long, s string, py string")
+        .where(F.lower("s") != F.col("py"))
+        .select("cp", F.lower("s").alias("image"))
+        .collect()
+    )
+    assert diff, "no disagreement at all: the sweep did not run as meant"
+    for r in diff:
+        assert unicodedata.category(chr(r["cp"])) == "Cn", hex(r["cp"])
+        for ch in r["image"][1:-1]:
+            assert unicodedata.category(ch) == "Cn" or ch in SPARK_ONLY_LOWER_IMAGES, (
+                hex(r["cp"]),
+                hex(ord(ch)),
+            )
+
+
+_ASSIGNED = st.characters(blacklist_categories=("Cs", "Cn"))
+# final sigma, Vietnamese diacritics, dotted capital I (lowers to two code
+# points), capital sharp s, titlecase digraphs, LIKE metacharacters
+_FRAGMENTS = ["ΟΔΟΣ", "σοφός ", "ΣΑΣ", "Tiếng Việt", "ĐẠI", "İstanbul", "ẞ", "Ǆǅ", "%_!'"]
+_texts = st.lists(
+    st.one_of(st.sampled_from(_FRAGMENTS), st.text(_ASSIGNED, max_size=3)), max_size=4
+).map("".join)
+_keywords = st.one_of(
+    st.just(""),
+    st.sampled_from(["ος", "ς", "σ", "việt", "đạ", "i̇", "ß", "ǆ", "%", "_", "!", "'"]),
+    st.text(_ASSIGNED, min_size=1, max_size=2),
+)
+
+
+@given(
+    st.lists(st.one_of(st.none(), _texts), min_size=1, max_size=25),
+    st.lists(st.lists(_keywords, min_size=1, max_size=3), min_size=1, max_size=4),
+)
+@example(keys=[None, "ΟΔΟΣ", "x"], kws=[["ς"], [""]])
+@SETTINGS
+def test_native_classify_column_matches_classify_batch(spark, keys, kws):
+    """For gate-passing rules, the native CASE projection gives every row
+    the label the Python path gives it, on unicode text with nulls and
+    with the empty keyword (which matches every non-null key)."""
+    c = RuleClassifier({f"L{i}": k for i, k in enumerate(kws)}, fallback="F")
+    assume(_native_rules(c))
+    got, want = _classify_both(spark, c, keys)
+    assert got == want
+
+
+def test_spark_only_lower_image_keyword_takes_python_path(spark):
+    """U+A7CB is unassigned for Python, so ``str.lower`` keeps it, while
+    Spark lowers it to ɤ: a rule on ɤ would label the text natively but
+    not in Python. The gate sends the rule set to the Python path, and
+    classify_column agrees with classify_batch."""
+    c = RuleClassifier({"X": ["\u0264"]}, fallback="F")
+    assert not _native_rules(c)
+    got, want = _classify_both(spark, c, ["\ua7cb", "\u0264", None])
+    assert got == want == ["F", "X", "F"]
 
 
 pack_rows = st.lists(
