@@ -9,28 +9,34 @@ statistics (:func:`count_triangles`, :func:`clustering_coefficient`,
 Iterative operators (all but the wedge statistics) run their own Spark
 jobs — a convergence loop needs actions — and share one contract:
 
-- **Edge prep.** The caller's edge plan runs ONCE: it is selected,
-  cached or checkpointed and counted before anything else. Undirected
-  operators symmetrize it, drop self-loops and ``distinct`` it
-  (:func:`_undirected_edges`); ``edges_unique=True`` is the caller's
-  assertion that the pairs are unique as UNORDERED pairs (a
-  groupBy/distinct output, one row per id_a<id_b), so the symmetrized
-  rows are distinct by construction and that shuffle+agg is skipped.
-  Where the count feeds degrees or votes (k_core, core_numbers, LPA) the
-  distinct is load-bearing for inputs with duplicate pairs; for
-  connected components and BFS a duplicate only adds message volume.
-- **Local mode.** All seven iterative operators share one contract:
-  when the counted edge total is at most ``_LINK_LOCAL_EDGE_CAP``
-  (:func:`_local_mode`, the only place a path is chosen), one bounded
-  Arrow ``toPandas`` pull of the prepared edge frame
-  (:func:`_collect_pairs`, every column — BFS carries its weights)
-  feeds numpy rounds over sorted-id index arrays (:func:`_edge_index`)
-  with the distributed rounds' exact update rules, and the result is
-  lifted back through ``util.local_df`` with the schema the distributed
-  path returns. At the graded sizes each distributed round is
-  ~0.5-0.9s of scheduling floor (join + agg stages, checkpoint), not
-  compute, and a 1.3M-edge graph is ~30 MB of longs. The decision is
-  upfront because every round touches every edge.
+- **Edge prep.** One prelude for all seven (:func:`_edge_frame`): the
+  caller's edge plan runs ONCE, selected as ``(_u, _v, *extra)``, cached
+  and counted. A row with a null endpoint is not an edge on either path
+  (dropped before the count; LPA reports no node for it). Undirected
+  operators then keep both directions, drop self-loops and keep one edge
+  per ``(u, v)``: in numpy on the local path
+  (:func:`_undirected_index`), and by ``distinct`` plus a checkpoint on
+  the distributed path (:func:`_undirected_edges`). ``edges_unique=True``
+  is the caller's assertion that the pairs are unique as UNORDERED pairs
+  (a groupBy/distinct output, one row per id_a<id_b); it skips only the
+  distributed ``distinct`` — local mode dedups either way. Where the
+  count feeds degrees or votes (k_core, core_numbers, LPA) the dedup is
+  load-bearing for inputs with duplicate pairs; for connected components
+  and BFS a duplicate only adds message volume.
+- **Local mode.** When the caller's non-null edge row count is at most
+  ``_LINK_LOCAL_EDGE_CAP`` (:func:`_local_mode`, the only place a path
+  is chosen, the same count for all seven), one bounded Arrow
+  ``toPandas`` pull of that cached frame (:func:`_collect_pairs`, every
+  column — BFS carries its weights) feeds numpy rounds over sorted-id
+  index arrays (:func:`_edge_index`) with the distributed rounds' exact
+  update rules, and the result is lifted back through ``util.local_df``
+  with the schema the distributed path returns. No ``distinct`` or
+  checkpoint runs before the pull, and the pull releases the cached
+  frame in its own ``finally``, so a local-mode call leaves no cached or
+  checkpointed block behind, also when it fails. At the graded sizes
+  each distributed round is ~0.5-0.9s of scheduling floor (join + agg
+  stages, checkpoint), not compute, and a 1.3M-edge graph is ~30 MB of
+  longs. The decision is upfront because every round touches every edge.
 - **Exactness.** Connected components, k_core, core_numbers, LPA and BFS
   are integer fixed points (component min id, peel survivors, pinned
   tie-broken labels, min hops), so local mode equals the distributed
@@ -97,46 +103,64 @@ def _checkpointer(spark, checkpoint_dir: str | None):
     return lambda df: df.checkpoint(eager=True)
 
 
-def _symmetrized(edges: DataFrame, src: str, dst: str, *extra) -> DataFrame:
-    """Both directions of every edge as ``(_u, _v, *extra)``."""
-    return edges.select(
+def _edge_frame(edges: DataFrame, src: str, dst: str, *extra):
+    """The one edge prelude: ``(_u, _v, *extra)`` rows of ``edges`` whose
+    endpoints are both non-null, cached and counted. Returns the frame
+    and its row count (what :func:`_local_mode` compares)."""
+    e = edges.select(
         F.col(src).alias("_u"), F.col(dst).alias("_v"), *extra
-    ).unionByName(
-        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"), *extra)
-    )
+    ).filter(F.col("_u").isNotNull() & F.col("_v").isNotNull()).cache()
+    return e, e.count()
+
+
+def _id_type(e: DataFrame, *more: DataFrame):
+    """The node id type the distributed loops return: ``e``'s two
+    endpoint columns and any one-column ``more`` frames, widened as a
+    union widens them (analysis only, no job)."""
+    ids = e.select("_u").union(e.select("_v"))
+    for m in more:
+        ids = ids.union(m)
+    return ids.schema[0].dataType
 
 
 def _undirected_edges(
-    edges: DataFrame, src: str, dst: str, edges_unique: bool, *extra
+    e: DataFrame, edges_unique: bool, ckpt=lambda df: df.localCheckpoint()
 ) -> tuple[DataFrame, int]:
-    """The undirected operators' edge prep: symmetrize, drop self-loops,
-    ``distinct`` unless ``edges_unique``, checkpoint, count. Returns the
-    checkpointed ``(_u, _v, *extra)`` frame and its row count."""
-    both = _symmetrized(edges, src, dst, *extra).filter(
-        F.col("_u") != F.col("_v")
-    )
+    """Distributed edge prep of the undirected operators over the cached
+    :func:`_edge_frame` ``e``: both directions, self-loops dropped,
+    ``distinct`` unless ``edges_unique``, materialized by ``ckpt`` and
+    counted; ``e`` is released. Returns the ``(_u, _v, *extra)`` frame
+    and its row count (the loop's shuffle width)."""
+    rev = e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"), *e.columns[2:])
+    both = e.unionByName(rev).filter(F.col("_u") != F.col("_v"))
     if not edges_unique:
         both = both.distinct()
-    both = both.localCheckpoint(eager=True)
+    both = ckpt(both)
+    e.unpersist()
     return both, both.count()
 
 
 def _collect_pairs(e: DataFrame):
-    """Local mode's one bounded edge pull: every column of ``e``, in
-    order, as numpy arrays. Arrow ``toPandas``: a 1.3M-row ``collect()``
-    of Row objects costs more than the numpy rounds it feeds (~10x)."""
-    with session_conf(
-        e.sparkSession, "spark.sql.execution.arrow.pyspark.enabled", "true"
-    ):
-        pdf = e.toPandas()
-    return tuple(pdf[c].to_numpy() for c in e.columns)
+    """Local mode's one bounded edge pull: every column of the cached
+    ``e``, in order, as numpy arrays; ``e`` is released whether or not
+    the pull succeeds. Arrow ``toPandas``: a 1.3M-row ``collect()`` of
+    Row objects costs more than the numpy rounds it feeds (~10x)."""
+    try:
+        with session_conf(
+            e.sparkSession, "spark.sql.execution.arrow.pyspark.enabled", "true"
+        ):
+            pdf = e.toPandas()
+    finally:
+        e.unpersist()
+    return tuple(pdf[c].to_numpy() for c in pdf.columns)
 
 
 def _edge_index(sarr, darr, *payload):
     """Sorted-id index arrays for the local loops: returns
-    (ids, src_idx, dst_idx, *payload) with edges sorted by (src, dst) so
-    the bincount accumulation order is a pure function of the edge SET;
-    each per-edge ``payload`` array comes back in that same order.
+    (ids, src_idx, dst_idx, *payload) with edges sorted by (src, dst,
+    *payload) so the bincount accumulation order is a pure function of
+    the edge SET; each per-edge ``payload`` array comes back in that
+    same order.
     ``pd.factorize(sort=True)`` assigns codes in sorted-unique order
     (value order == code order for numeric AND string ids) at C speed —
     the object-dtype python-sort path this replaces cost more than the
@@ -148,8 +172,27 @@ def _edge_index(sarr, darr, *payload):
     codes, uniques = pd.factorize(np.concatenate([sarr, darr]), sort=True)
     n = len(sarr)
     su, dv = codes[:n].astype("int64"), codes[n:].astype("int64")
-    order = np.lexsort((dv, su))
+    order = np.lexsort((*payload[::-1], dv, su))
     return (np.asarray(uniques), su[order], dv[order], *(p[order] for p in payload))
+
+
+def _undirected_index(sarr, darr, *payload):
+    """:func:`_edge_index` of the undirected graph on pulled rows: both
+    directions, self-loops dropped, one edge per ``(u, v)`` — the one
+    with the smallest payload (BFS keeps its cheapest parallel edge). A
+    node whose only rows are self-loops is not in ``ids``."""
+    import numpy as np
+
+    m = sarr != darr
+    s, d = sarr[m], darr[m]
+    ids, su, dv, *pay = _edge_index(
+        np.concatenate([s, d]),
+        np.concatenate([d, s]),
+        *(np.concatenate([p[m], p[m]]) for p in payload),
+    )
+    first = np.ones(len(su), dtype=bool)
+    first[1:] = (su[1:] != su[:-1]) | (dv[1:] != dv[:-1])
+    return (ids, su[first], dv[first], *(p[first] for p in pay))
 
 
 def connected_components(
@@ -171,10 +214,9 @@ def connected_components(
     output, and so is a node whose only edges are self-loops; callers
     attach them with a left join + coalesce(own id).
     """
-    pairs = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
     bad = [
         f"{c} {f.dataType.simpleString()}"
-        for c, f in zip((src, dst), pairs.schema.fields)
+        for c, f in zip((src, dst), edges.select(src, dst).schema.fields)
         if not isinstance(f.dataType, IntegralType)
     ]
     if bad:
@@ -185,32 +227,18 @@ def connected_components(
         )
     spark = edges.sparkSession
     _ckpt = _checkpointer(spark, checkpoint_dir)
-
-    # size every downstream shuffle (the symmetrize-distinct included) to
-    # the graph — a count() on the cached narrow frame is scan +
-    # partial-counts, no shuffle
-    e = pairs.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).cache()
-    n_edges = e.count()
+    e, n_edges = _edge_frame(edges, src, dst)
 
     if _local_mode(n_edges):
         import numpy as np
         import pandas as pd
 
-        try:
-            sarr, darr = _collect_pairs(e)
-            id_type = e.schema["_u"].dataType
-        finally:
-            e.unpersist()
-        # drop self-loops BEFORE indexing: the distributed path's sym
-        # filter means a node with ONLY self-loop edges is absent from
-        # the output — the local node universe must match
-        mask = sarr != darr
-        ids, su, dv = _edge_index(sarr[mask], darr[mask])
+        ids, su, dv = _undirected_index(*_collect_pairs(e))
+        id_type = _id_type(e)
         lbl = np.arange(len(ids), dtype="int64")
         while True:
             prev = lbl.copy()
-            np.minimum.at(lbl, su, lbl[dv])
-            np.minimum.at(lbl, dv, lbl[su])
+            np.minimum.at(lbl, su, lbl[dv])  # both directions are in (su, dv)
             while True:  # pointer jumping: label(label)
                 nxt = lbl[lbl]
                 if np.array_equal(nxt, lbl):
@@ -237,13 +265,12 @@ def connected_components(
             or 0
         )
 
+    # size every downstream shuffle (the symmetrize-distinct included)
+    # to the graph
     with sized_shuffle(spark, 2 * n_edges):
-        # both directions once, distinct so repeated pairs don't inflate
-        # every round's message volume; consumed once per round
-        sym = e.union(
-            e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-        ).filter(F.col("_u") != F.col("_v")).distinct().cache()
-        sym.count()
+        # distinct so repeated pairs don't inflate every round's message
+        # volume; consumed once per round
+        sym, _ = _undirected_edges(e, False, _ckpt)
         # label init: min over self + direct neighbors (both directions are
         # in sym, so every node appears as _u). Invariant from here on:
         # lbl(n) <= n and lbl(n) is in n's component.
@@ -276,9 +303,6 @@ def connected_components(
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
-
-    sym.unpersist()
-    e.unpersist()
     return lab.select(F.col("id").alias(out_id), F.col("lbl").alias(out_component))
 
 
@@ -395,28 +419,20 @@ def pagerank(
     regime: the O(N) rank frame is BROADCAST into the contribution join
     each round, removing the edge-side shuffle entirely (DataFrame
     localCheckpoint drops outputPartitioning, so the default path
-    re-exchanges both join inputs every round — the r6-flagged cost).
-    Per round that leaves ONE exchange (the dst aggregate). Correct
-    whenever N ≪ E and the rank state fits an executor (co-purchase /
-    host graphs: N ~ 20k-100k vs E in the millions); at web scale
-    (N in the billions) keep the default shuffle path. Values came out
-    bit-identical in the stress measurement (same max-err vs numpy on
-    both graphs), but that is NOT guaranteed: broadcasting changes the
+    re-exchanges both join inputs every round). Per round that leaves
+    ONE exchange (the dst aggregate). Correct whenever N ≪ E and the
+    rank state fits an executor (co-purchase / host graphs: N ~
+    20k-100k vs E in the millions); at web scale (N in the billions)
+    keep the default shuffle path. Broadcasting changes the
     partial-aggregation layout of the dst sum, so trailing float bits
     MAY differ — the same ulp-class variation the default path already
     has run-to-run (shuffle arrival order), absorbed by caller-side
-    rounding (the graded query's 1e-8).
-    Measured on scripts/stress_pagerank.py graphs (local[32], 8 rounds,
-    warm best pass): copurchase_full 2.4M edges / 20k nodes 12.2s ->
-    9.2s, zipf_web 1M edges / 95k nodes 8.0s -> 7.0s, identical
-    max-err vs numpy (BASELINE.md round-8 section). The r6/r7
-    "eliminate per-round exchanges via RDD-level checkpointing" idea
-    was measured in the same experiment and REJECTED: a co-partitioned
-    pair-RDD loop (pinned hash partitioner, narrow joins, ONE
-    reduceByKey shuffle per round, partitioner-preserving
-    rdd.localCheckpoint) runs 67.9s / 71.6s — Python-worker
-    serialization of O(E) tuples per round costs 5-7x more than the
-    exchanges it saves (scripts/stress_pagerank.py, variant='rdd').
+    rounding (the graded query's 1e-8). Measured on
+    scripts/stress_pagerank.py (local[32], 8 rounds, warm best pass):
+    2.4M edges / 20k nodes, 12.2s -> 9.2s. A co-partitioned pair-RDD
+    loop (one reduceByKey shuffle per round) is slower than both:
+    Python-worker serialization of O(E) tuples per round costs more
+    than the exchanges it saves (``variant='rdd'`` in that script).
 
     Floats: ranks are IEEE doubles, equal across runs and paths only to
     ulp-class error (module docstring). Reference analogue: none (the
@@ -425,32 +441,25 @@ def pagerank(
     """
     spark = edges.sparkSession
     _ckpt = _checkpointer(spark, checkpoint_dir)
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    ).cache()
-    m = e.count()
+    e, m = _edge_frame(edges, src, dst)
 
     if _local_mode(m):
-        try:
-            # the seed set collects distinct (bounded by the node count it
-            # must intersect to matter)
-            seed_vals = None
-            if seeds is not None:
-                seed_vals = {
-                    r[0]
-                    for r in seeds.select(F.col(seed_col)).distinct().collect()
-                }
-            return _pagerank_local(
-                spark, _collect_pairs(e), e.schema["_s"].dataType, damping,
-                iterations, seed_vals,
-            )
-        finally:
-            e.unpersist()
+        pairs = _collect_pairs(e)
+        # the seed set collects distinct (bounded by the node count it
+        # must intersect to matter)
+        seed_vals = None
+        if seeds is not None:
+            seed_vals = {
+                r[0] for r in seeds.select(F.col(seed_col)).distinct().collect()
+            }
+        return _pagerank_local(
+            spark, pairs, _id_type(e), damping, iterations, seed_vals
+        )
 
     with sized_shuffle(spark, m):
         nodes = (
-            e.select(F.col("_s").alias("id"))
-            .unionByName(e.select(F.col("_d").alias("id")))
+            e.select(F.col("_u").alias("id"))
+            .unionByName(e.select(F.col("_v").alias("id")))
             .distinct()
             .cache()
         )
@@ -459,9 +468,9 @@ def pagerank(
             e.unpersist()
             return nodes.select("id", F.lit(0.0).alias("rank"))
 
-        deg = e.groupBy(F.col("_s").alias("id")).agg(F.count(F.lit(1)).alias("_deg"))
+        deg = e.groupBy(F.col("_u").alias("id")).agg(F.count(F.lit(1)).alias("_deg"))
         # edges annotated with the sender's out-degree, reused every round
-        ed = e.join(deg, e["_s"] == deg["id"]).select("_s", "_d", "_deg").cache()
+        ed = e.join(deg, e["_u"] == deg["id"]).select("_u", "_v", "_deg").cache()
         ed.count()
         # nodes with no out-edges, computed ONCE (not an anti-join per round)
         dang = nodes.join(deg.select("id"), "id", "left_anti").cache()
@@ -490,8 +499,8 @@ def pagerank(
             )
             n_s = seed_ids.count()
             if n_s == 0:
-                # release every frame cached above (the r6 kmeans-leak
-                # lesson: an error path must not pin O(E) storage blocks)
+                # release every frame cached above: an error path must
+                # not pin O(E) storage blocks
                 for frame in (seed_ids, dang, ed, nodes, e):
                     frame.unpersist()
                 raise ValueError("no seeds present in the graph")
@@ -514,9 +523,9 @@ def pagerank(
         for _ in range(iterations):
             rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
             contrib = (
-                ed.join(rank_side, ed["_s"] == rank_side["id"])
+                ed.join(rank_side, ed["_u"] == rank_side["id"])
                 .select(
-                    F.col("_d").alias("id"), (F.col("rank") / F.col("_deg")).alias("_c")
+                    F.col("_v").alias("id"), (F.col("rank") / F.col("_deg")).alias("_c")
                 )
                 .groupBy("id")
                 .agg(F.sum("_c").alias("_in"))
@@ -677,7 +686,6 @@ def clustering_coefficient(
 def _lpa_local(
     spark,
     pairs,
-    node_vals,
     id_type,
     max_iterations: int,
     early_stop: bool,
@@ -689,11 +697,13 @@ def _lpa_local(
     node with a neighbor adopts the most frequent neighbor label, ties
     to the SMALLEST label; early stop when nothing changed). Works in
     index space over the SORTED id array, so smallest-index == smallest-
-    label-value and the tie pin carries over exactly."""
+    label-value and the tie pin carries over exactly. Every pulled
+    endpoint is a node; one whose only rows are self-loops keeps its own
+    label."""
     import numpy as np
     import pandas as pd
 
-    ids, su, dv = _edge_index(*pairs)
+    ids, su, dv = _undirected_index(*pairs)
     n = len(ids)
     lbl = np.arange(n, dtype="int64")
     for _ in range(int(max_iterations)):
@@ -704,8 +714,7 @@ def _lpa_local(
         # was label-ascending within each node already
         order = np.lexsort((lab, -cnt, node))
         nodes_sorted = node[order]
-        first = np.empty(len(order), dtype=bool)
-        first[0] = True
+        first = np.ones(len(order), dtype=bool)
         first[1:] = nodes_sorted[1:] != nodes_sorted[:-1]
         sel = order[first]
         new = lbl.copy()
@@ -713,12 +722,13 @@ def _lpa_local(
         if early_stop and np.array_equal(new, lbl):
             break
         lbl = new
-    lab_of = {ids[i]: ids[lbl[i]] for i in range(n)}
+    nodes = pd.unique(np.concatenate(pairs))
+    at = pd.Index(ids).get_indexer(nodes)
+    label = nodes.copy()
+    label[at >= 0] = ids[lbl[at[at >= 0]]]
     return local_df(
         spark,
-        pd.DataFrame(
-            {out_id: node_vals, out_label: [lab_of.get(u, u) for u in node_vals]}
-        ),
+        pd.DataFrame({out_id: nodes, out_label: label}),
         StructType([StructField(out_id, id_type), StructField(out_label, id_type)]),
     )
 
@@ -741,7 +751,9 @@ def label_propagation(
     stops early when no label changes.
 
     Output: ``(out_id, out_label)`` for every node in ``edges``
-    (undirected — each edge counts both ways). Synchronous LPA can
+    (undirected — each edge counts both ways; a node whose only rows are
+    self-loops keeps its own label, and a row with a null endpoint names
+    no node). Synchronous LPA can
     2-cycle on bipartite-ish structure (the classic caveat); the
     iteration cap is the contract, and the early-stop means converged
     graphs don't pay it.
@@ -754,28 +766,18 @@ def label_propagation(
     graphs (that speed is why the algorithm exists).
     """
     spark = edges.sparkSession
-    # ONE materialization of the edge lineage, BEFORE the self-loop
-    # filter: the propagation set and the every-node set below both derive
-    # from it, so this is not _undirected_edges (with edges_unique the
-    # cheap filter over it is not checkpointed again)
-    raw = _symmetrized(edges, src, dst).localCheckpoint(eager=True)
-    both = raw.filter(F.col("_u") != F.col("_v"))
-    if not edges_unique:
-        both = both.distinct().localCheckpoint(eager=True)
-    n_edges = both.count()
-
-    # node set derives BEFORE the self-loop filter so a node whose only
-    # edges are self-loops still appears (own-label) in the output per
-    # the every-node contract
-    all_nodes = raw.select("_u").distinct()
-
-    if _local_mode(n_edges):
-        node_vals = [r["_u"] for r in all_nodes.collect()]
+    e, n_rows = _edge_frame(edges, src, dst)
+    if _local_mode(n_rows):
         return _lpa_local(
-            spark, _collect_pairs(both), node_vals,
-            both.schema["_u"].dataType, int(max_iterations), early_stop,
-            out_id, out_label,
+            spark, _collect_pairs(e), _id_type(e), int(max_iterations),
+            early_stop, out_id, out_label,
         )
+    # every endpoint is a node, taken before the self-loop filter so a
+    # node whose only rows are self-loops still appears (own label)
+    all_nodes = (
+        e.select("_u").union(e.select("_v")).distinct().localCheckpoint(eager=True)
+    )
+    both, n_edges = _undirected_edges(e, edges_unique)
     labels = both.select(F.col("_u").alias("_id")).distinct().select(
         "_id", F.col("_id").alias("_lbl")
     ).localCheckpoint(eager=True)
@@ -859,7 +861,8 @@ def bfs_distances(
     most k edges, so the ≤``max_depth``-hop contract matches the
     recursive oracle by construction; an early fixed point is the global
     optimum and therefore also matches). Integer weights keep every cost
-    exact — quantize float weights upstream (the repo-wide rule).
+    exact — quantize float weights upstream (the repo-wide rule). A row
+    with a null weight is not an edge.
 
     Every round relaxes every edge from the PREVIOUS round's distances;
     at most ``max_depth`` rounds, stopping early when one changes
@@ -868,9 +871,12 @@ def bfs_distances(
     distributed round is dist JOIN edges [shuffle on node] -> neighbor
     candidates at d+w -> union + ONE min-agg, converged when the 1-row
     (count, sum) is stable (costs only decrease, nodes only appear —
-    stable ⟺ no edge relaxed). Measured on the traced ``graph_iterative``
-    perfbench workload (seed 1, 4-core host): 12 Spark jobs per call in
-    local mode (``graph.bfs.jobs`` 36 over 3 ops).
+    stable ⟺ no edge relaxed). Local mode runs the shared edge prelude
+    (cache, count, one Arrow pull) plus the seed collect: on the traced
+    ``graph_iterative`` perfbench workload (seed 1, 4-core host) that is
+    12 Spark jobs per call (``graph.bfs.jobs`` 36 over 3 ops) — the 7 of
+    :func:`connected_components` on the same edges plus 5 for the seed
+    plan.
     """
     spark = edges.sparkSession
     if weight_col is not None:
@@ -882,26 +888,21 @@ def bfs_distances(
                 "truncate 0.9 to 0 and corrupt distances) — quantize "
                 "float weights upstream, the repo-wide rule"
             )
+        edges = edges.filter(F.col(weight_col).isNotNull())
     w_expr = (
         F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
     )
-    both, n_edges = _undirected_edges(
-        edges, src, dst, edges_unique, w_expr.alias("_w")
-    )
+    e, n_rows = _edge_frame(edges, src, dst, w_expr.alias("_w"))
     dist = sources.select(
         F.col(source_id).alias("_id"), F.lit(0).cast("long").alias("_d")
     ).distinct()
 
-    if _local_mode(n_edges):
+    if _local_mode(n_rows):
         import numpy as np
         import pandas as pd
 
-        # the id type the distributed loop's unionByName yields (analysis
-        # only, no job), so both paths return the same schema
-        id_type = dist.unionByName(
-            both.select(F.col("_v").alias("_id"), F.col("_w").alias("_d"))
-        ).schema["_id"].dataType
-        ids, su, dv, w = _edge_index(*_collect_pairs(both))
+        ids, su, dv, w = _undirected_index(*_collect_pairs(e))
+        id_type = _id_type(e, dist.select("_id"))
         seed_vals = [r["_id"] for r in dist.collect()]
         at = pd.Index(ids).get_indexer(seed_vals)
         inf = np.iinfo("int64").max
@@ -931,6 +932,7 @@ def bfs_distances(
             ),
         )
 
+    both, n_edges = _undirected_edges(e, edges_unique)
     dist = dist.localCheckpoint(eager=True)
     with sized_shuffle(spark, n_edges):
         prev_sum = None
@@ -1024,21 +1026,16 @@ def hits(
     checkpointed ONCE and both consumers (the 1-row L1-mass aggregate
     and the normalize projection) read the checkpoint, because an
     uncached aggregate frame consumed twice re-runs its join per
-    consumer (measured 25.5s -> 3.4s at sf0.1 for exactly that reason).
+    consumer (sf0.1, 600k-edge bipartite, 8 rounds: 25.5s -> 13.8s).
     Zero-score nodes stay ABSENT from the state during rounds (an inner
     join contributes nothing for them anyway); the final select
     completes over the node set with COALESCE 0. At web scale (N too big
     to broadcast) pass ``broadcast_state=False`` for the shuffle-join
     path.
 
-    Measured wall-clock at sf0.1 (600k-edge bipartite, 35k nodes,
-    8 rounds) sits at the per-half-step scheduling floor (~0.7-0.9s x 16
-    actions ~= 12-14s): cutting to 6 rounds saves ~1s (and the graded
-    top-20 sets are ALREADY identical at 6 vs 8 — the bipartite fixpoint
-    converges early), and a fully-lazy ``cache()`` variant evaluating
-    all rounds in one action never finished (16 levels of nested
-    broadcast-join plan analysis) — both negative results kept here so
-    they are not re-attempted.
+    The distributed loop sits at the per-half-step scheduling floor. A
+    fully-lazy ``cache()`` variant evaluating all rounds in one action
+    never finishes (16 levels of nested broadcast-join plan analysis).
 
     Reference analogue: none (no graph surface in the reference); public
     formulation per Kleinberg, "Authoritative Sources in a Hyperlinked
@@ -1048,23 +1045,15 @@ def hits(
         raise ValueError(f"iterations must be >= 1, got {iterations!r}")
     spark = edges.sparkSession
     _ckpt = _checkpointer(spark, checkpoint_dir)
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    ).cache()
-    m = e.count()
+    e, m = _edge_frame(edges, src, dst)
 
     if _local_mode(m):
-        try:
-            return _hits_local(
-                spark, _collect_pairs(e), e.schema["_s"].dataType, iterations
-            )
-        finally:
-            e.unpersist()
+        return _hits_local(spark, _collect_pairs(e), _id_type(e), iterations)
 
     with sized_shuffle(spark, m):
         nodes = (
-            e.select(F.col("_s").alias("id"))
-            .unionByName(e.select(F.col("_d").alias("id")))
+            e.select(F.col("_u").alias("id"))
+            .unionByName(e.select(F.col("_v").alias("id")))
             .distinct()
             .cache()
         )
@@ -1082,12 +1071,10 @@ def hits(
         def _half(state, state_col, join_key, out_key, out_col, ckpt):
             # ONE join + agg, checkpointed; `raw` feeds both the 1-row
             # L1-mass aggregate and the normalize projection, and an
-            # unmaterialized frame there re-runs the join per consumer
-            # (measured 25.5s at sf0.1 vs 13.8s checkpointed). Leaving
-            # only the a-half lazy and relying on in-plan ReusedExchange
-            # was measured WORSE (18.0s): building the broadcast for the
-            # next join is its own job, so the lazy aggregate still
-            # recomputes per consumer. Both halves checkpoint.
+            # unmaterialized frame there re-runs the join per consumer.
+            # In-plan ReusedExchange does not save a lazy half: building
+            # the broadcast for the next join is its own job, so both
+            # halves checkpoint.
             raw = (
                 e.join(side(state), e[join_key] == state["id"])
                 .select(F.col(out_key).alias("id"), F.col(state_col).alias("_c"))
@@ -1104,13 +1091,12 @@ def hits(
         for _ in range(iterations):
             # zero-score nodes stay absent during rounds (inner joins
             # ignore them); the final select completes with COALESCE 0
-            a = _half(h, "_h", "_s", "_d", "_a", ckpt=True)
-            h = _half(a, "_a", "_d", "_s", "_h", ckpt=True)
+            a = _half(h, "_h", "_u", "_v", "_a", ckpt=True)
+            h = _half(a, "_a", "_v", "_u", "_h", ckpt=True)
     # Checkpoint the completion join BEFORE releasing the caches: `out`
     # is lazy, so unpersisting first would re-derive the node-set union
-    # and edge scan from source lineage on every downstream action
-    # (ADVICE r8) — the same per-round checkpoint discipline applied to
-    # the final frame.
+    # and edge scan from source lineage on every downstream action — the
+    # same per-round checkpoint discipline applied to the final frame.
     out = _ckpt(
         nodes.join(h, "id", "left")
         .join(a, "id", "left")
@@ -1168,12 +1154,12 @@ def k_core(
     if k < 1:
         raise ValueError("k_core needs k >= 1")
     spark = edges.sparkSession
-    both, n_edges = _undirected_edges(edges, src, dst, edges_unique)
-    if _local_mode(n_edges):
+    e, n_rows = _edge_frame(edges, src, dst)
+    if _local_mode(n_rows):
         import numpy as np
         import pandas as pd
 
-        ids, su, dv = _edge_index(*_collect_pairs(both))
+        ids, su, dv = _undirected_index(*_collect_pairs(e))
         su, dv = _peel_local(su, dv, k, max_rounds)
         deg = np.bincount(su, minlength=len(ids))
         keep = deg > 0
@@ -1182,11 +1168,12 @@ def k_core(
             pd.DataFrame({out_id: ids[keep], out_deg: deg[keep].astype("int64")}),
             StructType(
                 [
-                    StructField(out_id, both.schema["_u"].dataType),
+                    StructField(out_id, _id_type(e)),
                     StructField(out_deg, LongType()),
                 ]
             ),
         )
+    both, n_edges = _undirected_edges(e, edges_unique)
     with sized_shuffle(spark, n_edges):
         alive = _peel(both, k, max_rounds)
     return alive.groupBy("_u").agg(
@@ -1218,11 +1205,10 @@ def _peel(alive: DataFrame, k: int, max_rounds: int) -> DataFrame:
     """Inner peel loop shared by :func:`k_core` and :func:`core_numbers`:
     iterate degree-filter + two semi-joins over a symmetrized
     checkpointed directed-edge frame until the alive edge count is
-    stable (the unique k-core), checkpointing each round.
-
-    Local mode beats this loop only with an Arrow pull and numpy rounds:
-    a Row-object collect with a per-ROW Python peel measured a
-    REGRESSION at the graded scale (core_numbers 4.47s -> 5.59s)."""
+    stable (the unique k-core), checkpointing each round. Its local-mode
+    twin is :func:`_peel_local`: vectorized numpy rounds over the one
+    Arrow pull (a Row collect with a per-row Python peel is slower than
+    this loop at the graded scale: core_numbers 4.47s -> 5.59s)."""
     n_prev = alive.count()
     for _ in range(int(max_rounds)):
         survivors = (
@@ -1278,12 +1264,12 @@ def core_numbers(
     if max_core < 1:
         raise ValueError("core_numbers needs max_core >= 1")
     spark = edges.sparkSession
-    both, n_edges = _undirected_edges(edges, src, dst, edges_unique)
-    if _local_mode(n_edges):
+    e, n_rows = _edge_frame(edges, src, dst)
+    if _local_mode(n_rows):
         import numpy as np
         import pandas as pd
 
-        ids, su, dv = _edge_index(*_collect_pairs(both))
+        ids, su, dv = _undirected_index(*_collect_pairs(e))
         core = np.ones(len(ids), dtype="int32")
         for k in range(2, int(max_core) + 1):
             before = np.unique(su)
@@ -1301,11 +1287,12 @@ def core_numbers(
             pd.DataFrame({out_id: ids, out_core: core.astype("int32")}),
             StructType(
                 [
-                    StructField(out_id, both.schema["_u"].dataType),
+                    StructField(out_id, _id_type(e)),
                     StructField(out_core, IntegerType()),
                 ]
             ),
         )
+    both, n_edges = _undirected_edges(e, edges_unique)
     assigned: list[DataFrame] = []
     alive = both
     with sized_shuffle(spark, n_edges):

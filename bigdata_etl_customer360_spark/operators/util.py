@@ -230,8 +230,11 @@ def fan_out(
 def plan_summary(df: DataFrame) -> dict[str, int]:
     """Count the plan nodes that decide whether a query survives 100x:
     exchanges (shuffles), scans, joins by strategy, whole-stage-codegen
-    spans, and the red flags (CartesianProduct, BroadcastNestedLoopJoin,
-    row-at-a-time Python evals).
+    spans, the red flags (CartesianProduct, BroadcastNestedLoopJoin), and
+    Python-worker stages: every node that ships rows to a Python worker
+    (``BatchEvalPython``, ``ArrowEvalPython``, ``MapInPandas``/``MapInArrow``,
+    ``FlatMap[Co]GroupsIn{Pandas,Arrow}``, ``ArrowAggregatePython``,
+    ``ArrowWindowPython``, ...) counts once in ``python_evals``.
 
     The same introspection the plan tests do ad-hoc, exposed for users:
     ``plan_summary(q)["exchanges"]`` in a CI assertion pins a query's
@@ -257,7 +260,7 @@ def plan_summary(df: DataFrame) -> dict[str, int]:
     codegen_ids = set(re.findall(r"\*\((\d+)\)", buf2.getvalue()))
 
     def n(token: str) -> int:
-        return sum(1 for line in ops.splitlines() if token in line)
+        return sum(1 for line in ops.splitlines() if re.search(token, line))
 
     return {
         "exchanges": n("Exchange"),
@@ -268,7 +271,9 @@ def plan_summary(df: DataFrame) -> dict[str, int]:
         "nested_loop_joins": n("NestedLoop"),
         "cartesian_products": n("CartesianProduct"),
         "codegen_spans": len(codegen_ids),
-        "python_evals": n("BatchEvalPython") + n("ArrowEvalPython"),
+        "python_evals": n(
+            r"EvalPython|In(Pandas|Arrow|PySpark)|Arrow(Aggregate|Window)Python"
+        ),
         "windows": n("Window"),
         "aggregates": n("HashAggregate") + n("SortAggregate")
         + n("ObjectHashAggregate"),

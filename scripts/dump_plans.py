@@ -35,8 +35,9 @@ def main():
             "# Physical-plan audit (auto-generated by scripts/dump_plans.py)\n\n"
             "One row per graded query at sf0.01. `xchg` = Exchange count "
             "(shuffles), joins are by strategy (`bhj`/`smj`/`shj`/`bnlj`), "
-            " `py` = Arrow-batched Python "
-            "stages (row-wise BatchEvalPython is zero everywhere, enforced "
+            " `py` = Python-worker stages (pandas/Arrow UDF evals and the "
+            "mapInPandas/applyInPandas map and group nodes; row-wise "
+            "BatchEvalPython is zero everywhere, enforced "
             "by tests/test_plans.py::test_no_rowwise_python_eval_anywhere; "
             "CartesianProduct likewise).\n\n"
             "| query | xchg | scans | bhj | smj | shj | bnlj | py | win | agg |\n"

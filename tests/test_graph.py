@@ -271,16 +271,19 @@ def test_bfs_distances_chain_star_and_multisource(spark):
     assert {r["id"]: r["dist"] for r in bfs_distances(e, s2).collect()} == {99: 0}
 
 
-def test_bfs_distances_weighted_prefers_cheap_long_path(spark):
+def test_bfs_distances_weighted_prefers_cheap_long_path(spark, monkeypatch):
+    import bigdata_etl_customer360_spark.operators.graph as g
     from bigdata_etl_customer360_spark.operators.graph import bfs_distances
 
-    # 0->3 direct costs 10; 0->1->2->3 costs 3
-    edges = [(0, 3, 10), (0, 1, 1), (1, 2, 1), (2, 3, 1)]
+    # 0->3 direct costs 10; 0->1->2->3 costs 3; a null weight is no edge
+    edges = [(0, 3, 10), (0, 1, 1), (1, 2, 1), (2, 3, 1), (1, 3, None)]
     e = spark.createDataFrame(edges, schema="id_a long, id_b long, w long")
     s = spark.createDataFrame([(0,)], schema="id long")
-    got = {r["id"]: r["dist"]
-           for r in bfs_distances(e, s, weight_col="w").collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+    for cap in (0, 2_000_000):
+        monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", cap)
+        got = {r["id"]: r["dist"]
+               for r in bfs_distances(e, s, weight_col="w").collect()}
+        assert got == {0: 0, 1: 1, 2: 2, 3: 3}, cap
     # hop bound 1: only direct edges relax
     one = {r["id"]: r["dist"]
            for r in bfs_distances(e, s, weight_col="w", max_depth=1).collect()}
@@ -305,6 +308,9 @@ def test_bfs_local_mode_matches_distributed(spark, monkeypatch):
         w = rng.integers(1, 10, size=90) if weighted else np.ones(90, "int64")
         cases.append((np.stack([a, b], axis=1), w, [0, 7, 999], 20, weighted))
     cases.append((cases[1][0], cases[1][1], [3], 2, True))  # truncated
+    # parallel edges of weight 5 and 1: the cheap one wins on both paths
+    parallel = (np.array([[0, 1], [1, 0]]), np.array([5, 1]), [0], 20, True)
+    cases.append(parallel)
     n = 15_000
     star = np.stack([np.zeros(n, "int64"), np.arange(1, n + 1)], axis=1)
     cases.append((star, np.ones(n, "int64"), [0], 3, False))
@@ -327,6 +333,8 @@ def test_bfs_local_mode_matches_distributed(spark, monkeypatch):
             )
         want = np_bfs(edges.astype("int64"), w.astype("int64"), seeds, depth)
         assert got[0] == got[1] == want
+        if edges is parallel[0]:
+            assert want == {0: 0, 1: 1}
     assert want[0] == 0 and len(want) == n + 1  # the star: every leaf at 1
 
 
@@ -354,24 +362,75 @@ def test_bfs_ids_keep_their_type_on_both_paths(spark, monkeypatch):
         assert out[0][0].simpleString() == f"struct<id:{typ},dist:bigint>"
 
 
-@pytest.mark.parametrize("op", ["pagerank", "hits"])
+# session confs the graph operators change inside their calls
+_GRAPH_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.limit.initialNumPartitions",
+)
+_GRAPH_OPS = {
+    "connected_components": lambda g, e, s: g.connected_components(e),
+    "pagerank": lambda g, e, s: g.pagerank(e, "id_a", "id_b", iterations=2),
+    "hits": lambda g, e, s: g.hits(e, "id_a", "id_b", iterations=2),
+    "label_propagation": lambda g, e, s: g.label_propagation(e, max_iterations=2),
+    "bfs_distances": lambda g, e, s: g.bfs_distances(e, s, max_depth=3),
+    "k_core": lambda g, e, s: g.k_core(e, 2),
+    "core_numbers": lambda g, e, s: g.core_numbers(e, max_core=3),
+}
+
+
+def _persisted_after_local_call(spark, monkeypatch, op, fail):
+    """Persisted-RDD count change across one local-mode call of ``op``;
+    with ``fail`` the Arrow ``toPandas`` edge pull raises (a driver OOM
+    stand-in)."""
+    import bigdata_etl_customer360_spark.operators.graph as g
+
+    def boom(self):
+        raise RuntimeError("pull failed")
+
+    edges = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4), (1, 2), (5, 5)])
+    sources = spark.createDataFrame([(1,)], "id bigint")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    if fail:
+        monkeypatch.setattr(type(edges), "toPandas", boom)
+        with pytest.raises(RuntimeError, match="pull failed"):
+            _GRAPH_OPS[op](g, edges, sources)
+    else:
+        assert _GRAPH_OPS[op](g, edges, sources).count() > 0
+    return jsc.getPersistentRDDs().size() - before
+
+
+@pytest.mark.parametrize("op", sorted(_GRAPH_OPS))
 def test_link_local_mode_failed_pull_releases_edge_cache(spark, monkeypatch, op):
     """A failed local-mode edge pull must not leave the cached edge frame
     persisted for the rest of the session."""
+    assert _persisted_after_local_call(spark, monkeypatch, op, fail=True) == 0
+
+
+@pytest.mark.parametrize("op", sorted(_GRAPH_OPS))
+def test_graph_local_mode_leaves_no_persisted_blocks(spark, monkeypatch, op):
+    """A successful local-mode call leaves no cached or checkpointed
+    block behind: nothing runs before the pull but the one cached count."""
+    assert _persisted_after_local_call(spark, monkeypatch, op, fail=False) == 0
+
+
+@pytest.mark.parametrize("op", sorted(_GRAPH_OPS))
+def test_graph_id_type_widens_alike_on_both_paths(spark, monkeypatch, op):
+    """An int src and a bigint dst come back as the same column types
+    whichever path runs: local mode widens the endpoint types the way the
+    distributed loops' unions do."""
     import bigdata_etl_customer360_spark.operators.graph as g
 
-    def boom(e):
-        raise RuntimeError("pull failed")
-
-    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
-    seeds = spark.createDataFrame([(1,)], "id long")
-    kw = {"seeds": seeds} if op == "pagerank" else {}
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    monkeypatch.setattr(g, "_collect_pairs", boom)
-    with pytest.raises(RuntimeError, match="pull failed"):
-        getattr(g, op)(edges, iterations=2, **kw)
-    assert jsc.getPersistentRDDs().size() <= before
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "id_a int, id_b bigint"
+    )
+    sources = spark.createDataFrame([(1,)], "id int")
+    types = []
+    for cap in (2_000_000, 0):
+        monkeypatch.setattr(g, "_LINK_LOCAL_EDGE_CAP", cap)
+        types.append(_GRAPH_OPS[op](g, edges, sources).schema.simpleString())
+    assert types[0] == types[1]
 
 
 def test_pagerank_personalized_matches_numpy(spark):
@@ -699,8 +758,9 @@ def test_kcore_trio_local_mode_matches_distributed(spark, monkeypatch):
     edges = spark.createDataFrame(
         # K4 on 1-4 (3-core), pendant 5 off node 1, triangle 6-7-8,
         # self-loop 9 (LPA: own label), duplicate edge 2-3
+        # null endpoint (30, NULL): no edge, and no node anywhere
         [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (1, 5),
-         (6, 7), (7, 8), (6, 8), (9, 9), (2, 3)],
+         (6, 7), (7, 8), (6, 8), (9, 9), (2, 3), (30, None)],
         "id_a LONG, id_b LONG",
     )
 
@@ -718,6 +778,7 @@ def test_kcore_trio_local_mode_matches_distributed(spark, monkeypatch):
     assert [i for i, _ in kc] == [1, 2, 3, 4]  # K4 is the 3-core
     assert dict(cn)[5] == 1 and dict(cn)[6] == 2  # pendant 1, triangle 2
     assert dict(lp)[9] == 9  # self-loop-only node keeps its own label
+    assert 30 not in dict(lp) and None not in dict(lp)
 
 
 def test_cc_local_mode_matches_distributed(spark, monkeypatch):
@@ -774,23 +835,6 @@ def test_cc_non_integral_ids_raise_before_any_job(spark, monkeypatch):
     mixed = spark.createDataFrame([(1, 2.0)], "id_a bigint, id_b double")
     with pytest.raises(ValueError, match="id_b double"):
         g.keep_cluster_canonical(mixed, mixed, id_col="id_a")
-
-
-# session confs the graph operators change inside their calls
-_GRAPH_CONFS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.execution.arrow.pyspark.enabled",
-    "spark.sql.limit.initialNumPartitions",
-)
-_GRAPH_OPS = {
-    "connected_components": lambda g, e, s: g.connected_components(e),
-    "pagerank": lambda g, e, s: g.pagerank(e, "id_a", "id_b", iterations=2),
-    "hits": lambda g, e, s: g.hits(e, "id_a", "id_b", iterations=2),
-    "label_propagation": lambda g, e, s: g.label_propagation(e, max_iterations=2),
-    "bfs_distances": lambda g, e, s: g.bfs_distances(e, s, max_depth=3),
-    "k_core": lambda g, e, s: g.k_core(e, 2),
-    "core_numbers": lambda g, e, s: g.core_numbers(e, max_core=3),
-}
 
 
 @pytest.mark.parametrize("path", ["local", "distributed"])

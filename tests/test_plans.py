@@ -604,6 +604,15 @@ def test_plan_summary_counts(spark):
     assert s["python_evals"] == 0
 
 
+def test_plan_summary_counts_map_in_pandas_stage(spark):
+    from bigdata_etl_customer360_spark.operators.util import plan_summary
+
+    df = spark.range(4)
+    assert plan_summary(df.mapInPandas(lambda it: it, df.schema))[
+        "python_evals"
+    ] == 1
+
+
 def test_no_rowwise_python_eval_anywhere(spark):
     """No graded query may plan a row-at-a-time pickled Python eval
     (BatchEvalPython). Arrow-batched pandas UDFs (ArrowEvalPython /
